@@ -11,6 +11,8 @@ assumes a single file.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +32,8 @@ TABLES = (
 )
 
 
-# (application id, sf_dir, table) -> the file-inferred StructType.
+# (application id, sf_dir, table, file identity) -> the file-inferred
+# StructType.
 # r13 (guide §5/§6): every `spark.read.parquet` call pays a driver-side
 # footer read for schema inference — ~80 ms warm, ~65 ms more than the
 # explicit-schema read, and one build pass of the 35 bench keys makes
@@ -39,10 +42,21 @@ TABLES = (
 # later loads pass that SAME schema explicitly — the learned-schema
 # device the r12 state sink uses, moved to the batch scan (a real
 # deployment gets this from the catalog/metastore, which exists for
-# exactly this reason).  Plan metadata only, never row data; keyed on
-# the application id like the spread-probe memo, so a regenerated
-# fixture in a new process never sees a stale entry.
-_SCHEMA_CACHE: dict[tuple[str, str, str], object] = {}
+# exactly this reason).  Plan metadata only, never row data.  The file
+# identity (mtime_ns, size) is part of the key, so a fixture rewritten
+# within one process is inferred afresh instead of read with a stale
+# schema; the application id scopes entries to one session.
+_SCHEMA_CACHE: dict[tuple, object] = {}
+
+
+def _file_identity(path: str) -> tuple[int, int] | None:
+    """(mtime_ns, size) of a local fixture path; None where it cannot be
+    stat'ed (a remote URI), which keys on the path alone."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -69,7 +83,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (spark.sparkContext.applicationId, sf_dir, name, _file_identity(path))
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:
         df = spark.read.parquet(path)

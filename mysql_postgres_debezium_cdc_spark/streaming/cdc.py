@@ -16,11 +16,16 @@ shuffles destroy arrival order, so ordering is made EXPLICIT here:
    ``MERGE … WHEN MATCHED AND is_delete THEN DELETE / UPDATE SET * /
    INSERT *`` — expressed engine-neutrally so the state store can be
    parquet (tests), Delta/Iceberg (cluster), or JDBC.
-3. ``ParquetStateSink``: micro-batch merge into a snapshot directory
-   with atomic version-directory swap — the local stand-in for a Delta
-   MERGE sink; exactly-once = checkpointed offsets + idempotent merge
-   (same convergence argument as the reference's ON CONFLICT upsert,
-   Consumer.java:210-211).
+3. ``ParquetStateSink``: micro-batch merge into versioned parquet
+   state — one base snapshot plus at most one cumulative delta per
+   version, read back as ``apply_changes(base, delta)`` — with an atomic
+   ``_LOG`` swap: the local stand-in for a Delta MERGE sink.  A commit
+   writes only the rows of keys changed since the base (as the
+   reference's ``INSERT … ON CONFLICT`` / ``DELETE`` writes only the
+   rows a batch changes, Consumer.java:197-253); once the delta reaches
+   half the base, a commit folds it into a new base.  Exactly-once =
+   checkpointed offsets + idempotent merge (same convergence argument as
+   the reference's ON CONFLICT upsert, Consumer.java:210-211).
 
 Update-then-delete inside one batch lands correctly because compaction
 keeps the *delete* (highest offset) — reference gets this by processing
@@ -41,6 +46,22 @@ from pyspark.sql import DataFrame, SparkSession
 IS_DELETE = "_is_delete"
 ORDER_COL = "_cdc_offset"
 
+# Codec of every ParquetStateSink write: zstd stores these narrow keyed
+# tables in markedly fewer bytes than Spark's snappy default, and bytes on
+# disk are what the sink's retention bound and fold rule are stated in.
+_STATE_CODEC = "zstd"
+
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote one identifier for a Spark SQL string, so that a
+    column such as ``kafka-partition`` or ``table`` parses as one name
+    under any parser conf."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _pk_alias(col: str) -> str:
+    return f"_pk_{col}"
+
 
 def with_change_columns(
     decoded: DataFrame,
@@ -55,8 +76,10 @@ def with_change_columns(
     return (
         decoded.where("((_error IS NULL) AND (NOT _tombstone))")
         .where("op IN ('c', 'r', 'u', 'd')")
-        .selectExpr("*", f"(op = 'd') AS {IS_DELETE}")
-        .selectExpr("*", f"CAST({offset_col} AS LONG) AS {ORDER_COL}")
+        .selectExpr("*", f"(op = 'd') AS {quote_ident(IS_DELETE)}")
+        .selectExpr(
+            "*", f"CAST({quote_ident(offset_col)} AS LONG) AS {quote_ident(ORDER_COL)}"
+        )
     )
 
 
@@ -77,20 +100,21 @@ def compact(batch: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
     exchange carries ≤ one event per (key, map partition) — the
     frontier, not the firehose — which is the property that matters at
     100 TB."""
+    q = quote_ident
+    pk_aliases = [_pk_alias(c) for c in pk_cols]
     keyed = batch.selectExpr(
         "*",
-        *[f"COALESCE(after.{c}, before.{c}) AS _pk_{c}" for c in pk_cols],
+        *[f"COALESCE(after.{q(c)}, before.{q(c)}) AS {q(_pk_alias(c))}" for c in pk_cols],
     )
-    pk_aliases = [f"_pk_{c}" for c in pk_cols]
     others = [c for c in keyed.columns if c not in pk_aliases]
     return (
-        keyed.groupBy(*pk_aliases)
+        keyed.groupBy(*map(q, pk_aliases))
         .agg(
             F.expr(
-                f"MAX_BY(STRUCT({', '.join(others)}), {ORDER_COL}) AS _latest"
+                f"MAX_BY(STRUCT({', '.join(map(q, others))}), {q(ORDER_COL)}) AS _latest"
             )
         )
-        .select(*pk_aliases, "_latest.*")
+        .selectExpr(*map(q, pk_aliases), "_latest.*")
     )
 
 
@@ -105,42 +129,66 @@ def apply_changes(
     Returns the new state with schema (pk_cols ∪ row_cols ∪ _cdc_offset).
     Semantics = Delta MERGE (matched+delete → drop, matched → replace,
     not-matched-and-not-delete → insert)."""
-    upserts = compacted.where(f"(NOT {IS_DELETE})").selectExpr(
-        *[f"_pk_{c} AS {c}" for c in pk_cols],
-        *[f"after.{c} AS {c}" for c in row_cols],
-        ORDER_COL,
+    q = quote_ident
+    upserts = compacted.where(f"(NOT {q(IS_DELETE)})").selectExpr(
+        *[f"{q(_pk_alias(c))} AS {q(c)}" for c in pk_cols],
+        *[f"after.{q(c)} AS {q(c)}" for c in row_cols],
+        q(ORDER_COL),
     )
     if state is None:
         return upserts
     # Keys touched by this batch (upsert OR delete) are removed from the
     # old state; the batch's upserts then re-add the surviving versions.
     # A deleted key is simply absent from both sides of the union.
-    touched = compacted.selectExpr(*[f"_pk_{c} AS {c}" for c in pk_cols])
+    touched = compacted.selectExpr(*[f"{q(_pk_alias(c))} AS {q(c)}" for c in pk_cols])
     untouched = state.join(touched, on=list(pk_cols), how="left_anti")
     return untouched.unionByName(upserts)
 
 
 class ParquetStateSink:
-    """Versioned-snapshot keyed state store over parquet, with bounded
-    version RETENTION and time-travel reads.
+    """Versioned keyed state store over parquet, with bounded version
+    RETENTION and time-travel reads.
 
-    ``merge`` reads the current snapshot, applies a compacted batch and
-    writes a new snapshot directory, then atomically replaces a ``_LOG``
-    pointer file (write-temp + rename, atomic on POSIX — a poor man's
+    Layout (merge-on-read): a committed version is one *base* snapshot
+    directory (``v-…``, the state schema) plus at most one *cumulative
+    delta* directory (``d-…``).  The delta holds, in the compacted
+    shape (``_pk_*``, ``after`` limited to ``row_cols``, ``_is_delete``,
+    ``_cdc_offset``), the latest change of every key changed since the
+    base, deletes included, so ``read(v)`` is exactly
+    ``apply_changes(base, delta_v)``.  The first ``merge`` writes the
+    base; every later ``merge`` writes only
+    ``delta_prev ⟕anti batch-keys ∪ batch`` — O(keys changed since the
+    base), not O(state).  A redelivered batch rewrites the same delta
+    content, so replay stays idempotent.
+
+    Fold rule: at the start of a commit, once the previous version's
+    delta has reached half its base's bytes on disk, the commit writes
+    ``read(v-1)`` as a new base and repoints log entry v-1 to it with no
+    delta, then writes its own delta against that base.  The half is
+    derived, not tuned: at ``retain=2`` the retained bytes are one base
+    plus two deltas of at most about half of it each (the rule holds the
+    older one below half; the newer adds one batch), within the two
+    whole snapshots a rewrite-per-commit store keeps, and a fold leaves
+    one live base.
+
+    Each ``_LOG`` line is ``<seq>\\t<base>\\t<delta-or-empty>`` (a
+    two-field line from older versions reads as a base with no delta);
+    ``seq`` is a monotonic commit counter.  The log is replaced
+    atomically (write-temp + rename, atomic on POSIX — a poor man's
     Delta transaction log sufficient for single-writer streams;
     Structured Streaming guarantees one active foreachBatch writer per
-    query).  Each log line is ``<seq>\\t<name>`` where ``seq`` is a
-    monotonic commit counter, and the rewritten log holds only the
-    retained TAIL — commit cost and log size stay O(retain) on a
-    stream that commits forever, instead of growing O(n_commits).  The
-    last ``retain`` committed versions stay on disk:
-    ``read(version=-2)`` time-travels one commit back (relative), and
-    ``read(version=7)`` addresses absolute commit seq 7 — what
-    debugging a bad upstream batch or auditing a replica actually
-    needs.  Older snapshots are vacuumed on commit by listing the root
-    directory (never by replaying historical names).  On a cluster,
-    swap this class for ``DeltaTable.merge`` (with its own log
-    retention / VACUUM) and nothing upstream changes."""
+    query) and holds only the retained TAIL, so commit cost and log size
+    stay O(retain) on a stream that commits forever.  The last
+    ``retain`` committed versions stay readable: ``read(version=-2)``
+    time-travels one commit back (relative), and ``read(version=7)``
+    addresses absolute commit seq 7 — what debugging a bad upstream
+    batch or auditing a replica actually needs.  After each log swap,
+    every ``v-``/``d-`` directory that no retained line names is
+    vacuumed by listing the root (never by replaying historical names),
+    which also clears what a crashed commit left behind.  All writes use
+    zstd parquet.  On a cluster, swap this class for
+    ``DeltaTable.merge`` (with its own log retention / VACUUM) and
+    nothing upstream changes."""
 
     def __init__(
         self,
@@ -155,36 +203,36 @@ class ParquetStateSink:
         self.pk_cols = list(pk_cols)
         self.row_cols = list(row_cols)
         self.retain = max(1, retain)
-        # Snapshot schema, learned from the first commit (r12): every
-        # subsequent read() passes it explicitly so the parquet reader
-        # skips footer-based schema inference — one fewer driver-side
-        # file read per merge on a stream that commits every batch.
-        # The schema of a keyed state table is fixed for the sink's
-        # lifetime by construction (pk_cols/row_cols are constructor
-        # arguments).
-        self._schema = None
+        # Base and delta schemas by directory prefix, learned from their
+        # first read (r12): later reads pass them explicitly so the
+        # parquet reader skips footer-based schema inference — fewer
+        # driver-side file reads per merge on a stream that commits every
+        # batch.  Both are fixed for the sink's lifetime by construction
+        # (pk_cols/row_cols are constructor arguments).
+        self._schemas: dict[str, object] = {}
         os.makedirs(root, exist_ok=True)
 
     def _log_path(self) -> str:
         return os.path.join(self.root, "_LOG")
 
-    def _log_entries(self) -> list[tuple[int, str]]:
-        """Retained ``(seq, name)`` tail, oldest → newest."""
+    def _log_entries(self) -> list[tuple[int, str, str | None]]:
+        """Retained ``(seq, base, delta-or-None)`` tail, oldest → newest."""
         try:
             with open(self._log_path()) as f:
                 entries = []
                 for ln in f:
-                    ln = ln.strip()
-                    if ln:
-                        seq, name = ln.split("\t", 1)
-                        entries.append((int(seq), name))
+                    fields = ln.strip().split("\t")
+                    if fields[0]:
+                        delta = fields[2] if len(fields) > 2 and fields[2] else None
+                        entries.append((int(fields[0]), fields[1], delta))
                 return entries
         except FileNotFoundError:
             return []
 
     def versions(self) -> list[str]:
-        """Retained committed version names, oldest → newest."""
-        return [name for _, name in self._log_entries()]
+        """Retained committed versions, oldest → newest, each named by
+        the directory its reads end on (its delta, else its base)."""
+        return [delta or base for _, base, delta in self._log_entries()]
 
     def latest_seq(self) -> int:
         """Monotonic seq of the newest commit (-1 before any commit)."""
@@ -192,11 +240,13 @@ class ParquetStateSink:
         return entries[-1][0] if entries else -1
 
     def current_version_dir(self) -> str | None:
+        """The directory the latest commit wrote: its delta, or its base
+        when it wrote no delta (the first commit)."""
         vs = self.versions()
         return os.path.join(self.root, vs[-1]) if vs else None
 
     def read(self, version: int | None = None) -> DataFrame | None:
-        """Read a committed snapshot.  ``version=None`` → latest;
+        """Read a committed version.  ``version=None`` → latest;
         negative → relative to the latest retained commit (``-2`` = one
         commit back); non-negative → absolute commit seq.  Raises
         IndexError for a vacuumed/unknown version."""
@@ -204,52 +254,101 @@ class ParquetStateSink:
         if not entries:
             return None
         if version is None:
-            name = entries[-1][1]
+            entry = entries[-1]
         elif version < 0:
             if -version > len(entries):
                 raise IndexError(
                     f"relative version {version} outside the retained "
                     f"window of {len(entries)} commits (retain={self.retain})"
                 )
-            name = entries[version][1]
+            entry = entries[version]
         else:
-            by_seq = dict(entries)
+            by_seq = {e[0]: e for e in entries}
             if version not in by_seq:
                 raise IndexError(
                     f"commit seq {version} has been vacuumed or never "
                     f"committed (retained: {sorted(by_seq)}, retain={self.retain})"
                 )
-            name = by_seq[version]
+            entry = by_seq[version]
+        _, base, delta = entry
+        state = self._scan(base)
+        if delta is None:
+            return state
+        return apply_changes(state, self._scan(delta), self.pk_cols, self.row_cols)
+
+    def _scan(self, name: str) -> DataFrame:
         d = os.path.join(self.root, name)
         if not os.path.isdir(d):
             raise IndexError(f"version {name} has been vacuumed (retain={self.retain})")
+        kind = name[:2]
         reader = self.spark.read
-        if self._schema is not None:
-            reader = reader.schema(self._schema)
+        if kind in self._schemas:
+            reader = reader.schema(self._schemas[kind])
         df = reader.parquet(d)
-        self._schema = df.schema
+        self._schemas[kind] = df.schema
         return df
 
+    def _bytes(self, name: str) -> int:
+        d = os.path.join(self.root, name)
+        return sum(
+            os.path.getsize(os.path.join(d, f))
+            for f in os.listdir(d)
+            if not f.startswith((".", "_"))
+        )
+
+    def _write(self, prefix: str, seq: int, df: DataFrame) -> str:
+        name = f"{prefix}-{seq:08d}-{uuid.uuid4().hex[:8]}"
+        out = os.path.join(self.root, name)
+        df.write.mode("overwrite").option("compression", _STATE_CODEC).parquet(out)
+        return name
+
+    def _delta_rows(self, compacted: DataFrame) -> DataFrame:
+        """A compacted batch in the delta shape: keys, ``after`` limited
+        to ``row_cols``, delete flag and offset."""
+        q = quote_ident
+        after = ", ".join(f"after.{q(c)} AS {q(c)}" for c in self.row_cols)
+        return compacted.selectExpr(
+            *[q(_pk_alias(c)) for c in self.pk_cols],
+            f"STRUCT({after}) AS after",
+            q(IS_DELETE),
+            q(ORDER_COL),
+        )
+
     def merge(self, compacted: DataFrame) -> None:
-        new_state = apply_changes(self.read(), compacted, self.pk_cols, self.row_cols)
         entries = self._log_entries()
         seq = entries[-1][0] + 1 if entries else 0
-        version = f"v-{seq:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.root, version)
-        new_state.write.mode("overwrite").parquet(out_dir)
+        if not entries:
+            state = apply_changes(None, compacted, self.pk_cols, self.row_cols)
+            entries.append((seq, self._write("v", seq, state), None))
+        else:
+            prev_seq, base, delta = entries[-1]
+            # Fold once the delta reaches half its base (the ratio's
+            # derivation is in the class docstring).
+            if delta is not None and 2 * self._bytes(delta) >= self._bytes(base):
+                base, delta = self._write("v", seq, self.read()), None
+                entries[-1] = (prev_seq, base, None)
+            rows = self._delta_rows(compacted)
+            if delta is not None:
+                q = quote_ident
+                keys = rows.selectExpr(*[q(_pk_alias(c)) for c in self.pk_cols])
+                kept = self._scan(delta).join(
+                    keys, on=[_pk_alias(c) for c in self.pk_cols], how="left_anti"
+                )
+                rows = kept.unionByName(rows)
+            entries.append((seq, base, self._write("d", seq, rows)))
         # Atomic log swap (rename is atomic on POSIX).  Only the retained
         # tail is rewritten, so the log never grows with stream lifetime;
         # the monotonic seq keeps absolute version addressing stable.
-        tail = (entries + [(seq, version)])[-self.retain :]
+        tail = entries[-self.retain :]
         fd, tmp = tempfile.mkstemp(dir=self.root)
         with os.fdopen(fd, "w") as f:
-            f.write("\n".join(f"{s}\t{n}" for s, n in tail) + "\n")
+            f.write("".join(f"{s}\t{b}\t{d or ''}\n" for s, b, d in tail))
         os.replace(tmp, self._log_path())
-        # Vacuum snapshots beyond the retention window by listing the
-        # root — O(live dirs), not O(historical commits).
-        keep = {name for _, name in tail}
+        # Vacuum every base or delta no retained line names, by listing
+        # the root — O(live dirs), not O(historical commits).
+        keep = {n for _, b, d in tail for n in (b, d) if n}
         for entry in os.listdir(self.root):
-            if entry.startswith("v-") and entry not in keep:
+            if entry.startswith(("v-", "d-")) and entry not in keep:
                 d = os.path.join(self.root, entry)
                 if os.path.isdir(d):
                     shutil.rmtree(d, ignore_errors=True)
@@ -449,12 +548,12 @@ class MultiTableCdcRouter:
     tables fall through to the dead-letter side rather than failing the
     batch (Consumer.java:186-188 posture).
 
-    Physical shape per micro-batch: the mixed batch is decoded ONCE
-    with each table's schema applied to its own slice (filter on
-    ``src_table`` — a narrow predicate on an already-parsed column, so
-    the JSON parse is not repeated per table), then each slice runs the
-    standard compact→merge.  Per-table slices are independent — on a
-    cluster they run as parallel jobs off one cached batch.
+    Physical shape per micro-batch: the mixed batch is persisted once,
+    then each table's slice decodes it with that table's schema, filters
+    on ``src_table`` and runs the standard compact→merge — the JSON
+    envelope is parsed once per table (N parses on N tables), not once
+    per batch.  Per-table slices are independent — on a cluster they run
+    as parallel jobs off the one cached batch.
     """
 
     def __init__(self, spark, config, table_specs, state_root: str):

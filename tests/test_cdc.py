@@ -422,11 +422,18 @@ def test_state_sink_time_travel_and_retention(spark, tmp_path):
         sink.read(version=0)  # first snapshot vacuumed (retain=2)
     with pytest.raises(IndexError):
         sink.read(version=-3)  # outside the retained relative window
-    # exactly `retain` snapshot dirs remain on disk
+    # the base/delta dirs on disk are exactly those the retained log
+    # lines name
     import os
 
-    dirs = [d for d in os.listdir(tmp_path / "state") if d.startswith("v-")]
-    assert len(dirs) == 2
+    dirs = {d for d in os.listdir(tmp_path / "state") if d.startswith(("v-", "d-"))}
+    named = {
+        n
+        for ln in (tmp_path / "state" / "_LOG").read_text().splitlines()
+        for n in ln.split("\t")[1:]
+        if n
+    }
+    assert dirs == named
 
 
 def test_unsupported_op_is_dead_lettered_not_dropped(spark):
