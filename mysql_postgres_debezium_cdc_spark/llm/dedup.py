@@ -1210,12 +1210,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta pair table (swap ``DeltaStateSink``, nothing upstream
     changes).  Run-scoped state/checkpoint dirs are reclaimed in a
     ``finally`` once the pair state is pinned (VERDICT r9 task #4)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from mysql_postgres_debezium_cdc_spark.scratch import materialize_once
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import ParquetStateSink
+    from mysql_postgres_debezium_cdc_spark.streaming.jobs import fold_file_stream
 
     idx_prof, idx_bands = _read_mh_index(spark, _mh_index_path(spark, sf_dir))
 
@@ -1228,52 +1224,21 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(p)
         )
 
-    slices = materialize_once(sf_dir, "mh_stream_slices", _write_slices)
-    schema = spark.read.parquet(slices).schema
-
-    run = f"{tempfile.gettempdir()}/spark_graft_stream_dedup_{spark.sparkContext.applicationId}_{uuid.uuid4().hex}"
-    sink = ParquetStateSink(
-        spark, f"{run}/state", pk_cols=("new_doc", "dup_doc"), row_cols=("jaccard",)
-    )
-
-    def _probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _probe_batch(sink, batch_df: DataFrame, batch_id: int) -> None:
         newp = _mh_profile_of(batch_df).localCheckpoint(eager=True)
         _dedup_pair_fold(
             sink, _probe_mh_index(newp, idx_prof, idx_bands), batch_id
         )
 
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(slices)
-            .writeStream.foreachBatch(_probe_batch)
-            .option("checkpointLocation", f"{run}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "stream_incremental_dedup: streaming probe did not finish "
-                "within 300 s — refusing to report a partial pair state"
-            )
-        if q.exception() is not None:
-            raise q.exception()
-        state = sink.read()
-        if state is None:  # zero micro-batches committed (empty source)
-            pairs = spark.createDataFrame(
-                [], "new_doc bigint, dup_doc bigint, jaccard double"
-            )
-        else:
-            # Pin the collision-bounded pair state into the session block
-            # store so the run-scoped sink directory can be reclaimed.
-            pairs = state.select("new_doc", "dup_doc", "jaccard").localCheckpoint(
-                eager=True
-            )
-    finally:
-        shutil.rmtree(run, ignore_errors=True)
+    pairs = fold_file_stream(
+        spark,
+        materialize_once(sf_dir, "mh_stream_slices", _write_slices),
+        "dedup",
+        ("new_doc", "dup_doc"),
+        ("jaccard",),
+        _probe_batch,
+        "new_doc bigint, dup_doc bigint, jaccard double",
+    )
     return pairs.orderBy("new_doc", "dup_doc")
 
 

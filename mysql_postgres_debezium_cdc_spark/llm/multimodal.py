@@ -575,8 +575,8 @@ def _media_key_columns() -> list:
     identically."""
     # r13 (guide §5): each key ships as ONE SQL string instead of ~45
     # py4j DSL calls — same expression tree, parsed JVM-side
-    # (scripts/ab_media_expr_r13.py proves the analyzed plans identical
-    # modulo expression ids).
+    # (at a checkout of b2c0d21, `scripts/ab.py b2c0d21^ dedup_media_lsh`
+    # shows the analyzed plans equal modulo expression ids).
     keys = []
     for band in (0, 1):
         for off in (0, MEDIA_LSH_GRID // 2):
@@ -619,7 +619,7 @@ def _media_pairs_from_features(
 
     # r13 (guide §5): the 8-term dot products and the integer verdict
     # ship as SQL strings — same trees, one py4j round trip each
-    # (scripts/ab_media_expr_r13.py).
+    # (b2c0d21^ → b2c0d21, proved with the bucket keys above).
     def _dotsql(x: str, y: str) -> str:
         return (
             "("

@@ -529,8 +529,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation, a numpy assignment kernel) were interleaved-A/B'd and
     # ALL lost or tied at sf0.1 — the flat crossJoin rows are codegen-
     # friendly where nested array-of-struct evaluation is interpreted
-    # (scripts/ab_ann_r13.py; OPTIMIZATION_r13.md has the numbers).
-    # The r12 shape stays.
+    # (OPTIMIZATION_r13.md has the numbers).  The r12 shape stays; at a
+    # checkout of 841a194, `scripts/ab.py 841a194^ ann_ivf_topk
+    # ann_ivfpq_topk` re-times the kernel change it shipped beside.
     ccos = cosine_from_norms(_dot(F.col("emb"), F.col("c_emb")), F.col("nrm"), F.col("c_nrm"))
     cw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
     scored_cells = (

@@ -2290,7 +2290,8 @@ def _experiment_report_from_per_user(per_user: DataFrame) -> DataFrame:
     # (cProfile: 1.67 s of socket wait — more than the query's own
     # action at sf0.1); the strings parse JVM-side into the IDENTICAL
     # analyzed plan (compared equal modulo expression ids at 3 scales
-    # before the swap — scripts/ab_report_expr_r13.py).  Two parser
+    # before the swap; at a checkout of b2c0d21, re-prove with
+    # `scripts/ab.py b2c0d21^ events_experiment_report`).  Two parser
     # traps make the strings non-obvious: bare `100.0` is DECIMAL(4,1)
     # in Spark SQL (the DSL's F.lit(100.0) is a double), hence the `D`
     # suffixes; and Python's `2 * col` builds `col * 2` (reverse-op),
@@ -2307,7 +2308,8 @@ def _experiment_report_from_per_user(per_user: DataFrame) -> DataFrame:
     # no row (hence no raw/cuped/msprt output rows) when either arm is
     # empty, matching the oracle's tc CTE.  Plan effect at sf0.1: the
     # report drops 24 shuffle exchanges → 9 and 15 cache scans → 7
-    # (plans/r12/events_experiment_report_{before,after}.txt).
+    # (d0e29a1^ → d0e29a1; at a checkout of d0e29a1,
+    # `scripts/ab.py d0e29a1^ events_experiment_report` diffs the plans).
     E = F.expr
     stats = (
         per_user.agg(
@@ -2943,8 +2945,9 @@ def _winsorized_welch(per_user: DataFrame) -> DataFrame:
     from mysql_postgres_debezium_cdc_spark.operators.stats import _banded_rank_cums
 
     # r13 (guide §5): SQL-string expressions, same trees, one py4j
-    # round trip each (scripts/ab_banded_expr_r13.py proves analyzed
-    # plans identical modulo expression ids; see the report rewrite for
+    # round trip each (at a checkout of b2c0d21, `scripts/ab.py b2c0d21^
+    # events_experiment_winsorized` shows the analyzed plans equal
+    # modulo expression ids; see the report rewrite for
     # the literal-suffix trap the strings must respect).
     E = F.expr
     per_user = per_user.persist()
@@ -3444,6 +3447,22 @@ def _experiment_state_per_user(state: DataFrame) -> DataFrame:
     )
 
 
+def _exp_stream_slices(spark: SparkSession, sf_dir: str) -> str:
+    """The events fixture range-split into ``STREAM_EXP_SLICES`` parquet
+    files, one micro-batch each: the source of both experiment twins."""
+    from mysql_postgres_debezium_cdc_spark.scratch import materialize_once
+
+    def _write_slices(p: str) -> None:
+        (
+            load(spark, sf_dir, "events")
+            .repartitionByRange(STREAM_EXP_SLICES, "event_id")
+            .write.mode("overwrite")
+            .parquet(p)
+        )
+
+    return materialize_once(sf_dir, "exp_stream_slices", _write_slices)
+
+
 @register(
     "stream_experiment_snapshot",
     oracle="{REPORT}",  # bound below: the batch report's oracle certifies it
@@ -3483,66 +3502,17 @@ def stream_experiment_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream.  The run-scoped state/checkpoint directories are reclaimed
     in a ``finally`` once the user-bounded state is pinned to the
     session block store (VERDICT r9 task #4)."""
-    import shutil
-    import tempfile
-    import uuid
+    from mysql_postgres_debezium_cdc_spark.streaming.jobs import fold_file_stream
 
-    from mysql_postgres_debezium_cdc_spark.scratch import materialize_once
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import ParquetStateSink
-
-    def _write_slices(p: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .repartitionByRange(STREAM_EXP_SLICES, "event_id")
-            .write.mode("overwrite")
-            .parquet(p)
-        )
-
-    slices = materialize_once(sf_dir, "exp_stream_slices", _write_slices)
-    schema = spark.read.parquet(slices).schema
-
-    run = (
-        f"{tempfile.gettempdir()}/spark_graft_stream_exp_"
-        f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex}"
+    state = fold_file_stream(
+        spark,
+        _exp_stream_slices(spark, sf_dir),
+        "exp",
+        ("batch_id", "user_id"),
+        ("x", "y"),
+        _experiment_fold_with_compaction,
+        "batch_id bigint, user_id bigint, x bigint, y bigint",
     )
-    sink = ParquetStateSink(
-        spark, f"{run}/state", pk_cols=("batch_id", "user_id"), row_cols=("x", "y")
-    )
-
-    def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _experiment_fold_with_compaction(sink, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(slices)
-            .writeStream.foreachBatch(_fold_batch)
-            .option("checkpointLocation", f"{run}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "stream_experiment_snapshot: streaming fold did not finish "
-                "within 300 s — refusing to report from a partial state "
-                "generation"
-            )
-        if q.exception() is not None:
-            raise q.exception()
-        state = sink.read()
-        if state is None:  # zero micro-batches committed (empty source)
-            state = spark.createDataFrame(
-                [], "batch_id bigint, user_id bigint, x bigint, y bigint"
-            )
-        else:
-            # Pin the user-bounded state into the session block store so
-            # the run-scoped sink directory can be reclaimed immediately.
-            state = state.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(run, ignore_errors=True)
     per_user = (
         _experiment_state_per_user(state)
         .select((F.col("user_id") % 2).alias("arm"), "x", "y")
@@ -3635,61 +3605,17 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed double tree [[_lgamma_col]]/[[_lgamma_sql]], and the bound
     oracle replays the column-union of the two batch oracles from the
     identical literals."""
-    import shutil
-    import tempfile
-    import uuid
+    from mysql_postgres_debezium_cdc_spark.streaming.jobs import fold_file_stream
 
-    from mysql_postgres_debezium_cdc_spark.scratch import materialize_once
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import ParquetStateSink
-
-    def _write_slices(p: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .repartitionByRange(STREAM_EXP_SLICES, "event_id")
-            .write.mode("overwrite")
-            .parquet(p)
-        )
-
-    slices = materialize_once(sf_dir, "exp_stream_slices", _write_slices)
-    schema = spark.read.parquet(slices).schema
-
-    run = (
-        f"{tempfile.gettempdir()}/spark_graft_stream_srm_"
-        f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex}"
+    state = fold_file_stream(
+        spark,
+        _exp_stream_slices(spark, sf_dir),
+        "srm",
+        ("user_id",),
+        ("arm",),
+        _srm_fold,
+        "user_id bigint, arm bigint",
     )
-    sink = ParquetStateSink(
-        spark, f"{run}/state", pk_cols=("user_id",), row_cols=("arm",)
-    )
-
-    def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _srm_fold(sink, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(slices)
-            .writeStream.foreachBatch(_fold_batch)
-            .option("checkpointLocation", f"{run}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "stream_srm_monitor: streaming fold did not finish within "
-                "300 s — refusing to report from a partial state generation"
-            )
-        if q.exception() is not None:
-            raise q.exception()
-        state = sink.read()
-        if state is None:  # zero micro-batches committed (empty source)
-            state = spark.createDataFrame([], "user_id bigint, arm bigint")
-        else:
-            state = state.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(run, ignore_errors=True)
     arms = state.agg(
         F.count(F.when(F.col("arm") == 1, 1)).cast("bigint").alias("nt"),
         F.count(F.when(F.col("arm") == 0, 1)).cast("bigint").alias("nc"),

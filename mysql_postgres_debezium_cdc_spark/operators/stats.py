@@ -604,7 +604,8 @@ def _banded_rank_cums(vals: DataFrame) -> DataFrame:
     fact-sized groupBy (the justified-persist rule)."""
     # r13 (guide §5): the window/select trees ship as SQL strings —
     # same trees, one py4j round trip each instead of one per operator
-    # (scripts/ab_banded_expr_r13.py proves the analyzed plans identical
+    # (at a checkout of b2c0d21, `scripts/ab.py b2c0d21^
+    # events_experiment_winsorized` shows the analyzed plans equal
     # modulo expression ids).  Frames are spelled out because the DSL
     # used explicit rowsBetween frames, not the parser's RANGE default.
     banded = vals.selectExpr(

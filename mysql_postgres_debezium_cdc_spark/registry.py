@@ -69,78 +69,72 @@ _LOADED = False
 # program is REFRESH — no key's green driver row should predate its current
 # code.
 #
-# Round-13 prefix, mechanically derived by `scripts/drift_audit.py`
-# and re-spliced at the end of the r13 OPTIMIZATION round:
-#   1. The two keys the r12 overflow DEFERRED (stream_experiment_snapshot,
-#      stream_srm_monitor) HEAD the prefix, per the degradation rule the
-#      r12 round defined and tests/test_rotation_discipline.py enforces.
-#   2. 37 keys drifted past their last green row — the r13 optimization
-#      edits (the SimHash signature / RRF-norm / chunk-dims / IVF-PQ
-#      encode kernels, the DSIR window restructure, the containment /
-#      contamination kernel adoption, the SQL-string expression builds
-#      for the report / rank-statistic / media / CDC trees) have NARROW
-#      closures, so drift
-#      fits the window with room to spare (no new deferral).  Every
-#      drifted key was value-checked against its unchanged DuckDB oracle
-#      at sf0.001/sf0.01/sf0.1 during the round — this queue is the
-#      driver-row refresh, not suspicion.
-#   3. Remaining slots fill with the oldest-standing green certs
-#      (r5/r6 vintage), the audit's proxy for helper drift its
-#      closure analysis cannot see.
+# Current prefix, mechanically derived by `scripts/drift_audit.py` after
+# the one-parse envelope decode and the shared stream-twin driver (the
+# round-13 prefix is in git history):
+#   1. Tier 2: the 26 keys drifted past their last green row — the CDC
+#      family (decode_envelope now parses once), the three stream twins
+#      (one fold driver), and the r13 expression-string rewrites the r13
+#      driver rows predate.  Every one was value-checked against its
+#      unchanged DuckDB oracle (`scripts/sweep_parity.py`) — this queue
+#      is the driver-row refresh, not suspicion.
+#   2. Tier 3: remaining slots fill with the oldest-standing green certs
+#      (r5/r6 vintage), the audit's proxy for helper drift its closure
+#      analysis cannot see.
 # Every key also passes the identical in-repo comparison
 # (tests/test_oracle_parity.py), which sweeps all registered keys every
 # round regardless of prefix.
 _PRIORITY: tuple[str, ...] = (
-    "stream_experiment_snapshot",  # r12-DEFERRED, heads r13 per the overflow rule; drifted (last green r11)
-    "stream_srm_monitor",  # r12-DEFERRED, heads r13 per the overflow rule; drifted (last green r11)
-    "ann_ivf_recall_eval",  # tier 2: drifted (last green r6)
-    "corpus_rag_persisted_chunks",  # tier 2: drifted (last green r6)
-    "cdc_envelope_encode_roundtrip",  # tier 2: drifted (last green r8)
-    "corpus_rag_retrieval",  # tier 2: drifted (last green r8)
-    "dedup_media_incremental",  # tier 2: drifted (last green r8)
-    "dedup_media_lsh",  # tier 2: drifted (last green r8)
-    "dedup_media_lsh_persisted",  # tier 2: drifted (last green r8)
-    "cdc_deadletter_isolation",  # tier 2: drifted (last green r9)
-    "events_funnel_time_to_convert",  # tier 2: drifted (last green r9)
-    "stats_ks_test",  # tier 2: drifted (last green r9)
-    "stats_mann_whitney_u",  # tier 2: drifted (last green r9)
-    "ann_ivf_topk",  # tier 2: drifted (last green r10)
-    "cdc_envelope_decode",  # tier 2: drifted (last green r10)
-    "ann_ivfpq_persisted_index",  # tier 2: drifted (last green r11)
-    "ann_ivfpq_topk",  # tier 2: drifted (last green r11)
-    "events_experiment_winsorized",  # tier 2: drifted (last green r11)
-    "cdc_composite_pk_materialize",  # tier 2: drifted (last green r12)
-    "cdc_incremental_agg_maintenance",  # tier 2: drifted (last green r12)
-    "cdc_incremental_convergence",  # tier 2: drifted (last green r12)
-    "cdc_lastwrite_materialize",  # tier 2: drifted (last green r12)
-    "cdc_offset_range_diff",  # tier 2: drifted (last green r12)
-    "cdc_scd2_history",  # tier 2: drifted (last green r12)
-    "cdc_scd2_point_in_time_join",  # tier 2: drifted (last green r12)
-    "cdc_schema_drift_decode",  # tier 2: drifted (last green r12)
-    "corpus_dsir_importance",  # tier 2: drifted (last green r12)
-    "dedup_media_clusters",  # tier 2: drifted (last green r12)
-    "dedup_ngram_containment",  # tier 2: drifted (last green r12)
-    "dedup_simhash",  # tier 2: drifted (last green r12)
-    "dq_contamination_ngram_overlap",  # tier 2: drifted (last green r12)
-    "dq_decontaminate_corpus",  # tier 2: drifted (last green r12)
-    "events_effect_msprt",  # tier 2: drifted (last green r12)
-    "events_experiment_report",  # tier 2: drifted (last green r12)
-    "join_interval_overlap",  # tier 2: drifted (last green r12)
-    "rag_rrf_fusion",  # tier 2: drifted (last green r12)
-    "rag_rrf_persisted_index",  # tier 2: drifted (last green r12)
-    "dedup_exact_substring_spans",  # tier 3: oldest-standing cert (r5)
-    "embedding_dimension_stats",  # tier 3: oldest-standing cert (r5)
-    "embedding_normalize_quantize",  # tier 3: oldest-standing cert (r5)
-    "events_ewma_hourly",  # tier 3: oldest-standing cert (r5)
-    "events_markov_transition",  # tier 3: oldest-standing cert (r5)
-    "events_sessionize_gap_chunked",  # tier 3: oldest-standing cert (r5)
-    "layout_dpp_join_pruned_scan",  # tier 3: oldest-standing cert (r5)
-    "layout_zorder_cells",  # tier 3: oldest-standing cert (r5)
-    "stream_static_enrichment",  # tier 3: oldest-standing cert (r5)
-    "stream_stream_join_left_outer",  # tier 3: oldest-standing cert (r5)
-    "stream_user_running_state_stateful",  # tier 3: oldest-standing cert (r5)
-    "text_pii_redaction",  # tier 3: oldest-standing cert (r5)
-    "text_quality_classifier",  # tier 3: oldest-standing cert (r5)
+    "stream_incremental_dedup",  # tier 2: drifted (last green r12)
+    "ann_ivf_recall_eval",  # tier 2: drifted (last green r13)
+    "ann_ivf_topk",  # tier 2: drifted (last green r13)
+    "cdc_composite_pk_materialize",  # tier 2: drifted (last green r13)
+    "cdc_deadletter_isolation",  # tier 2: drifted (last green r13)
+    "cdc_envelope_decode",  # tier 2: drifted (last green r13)
+    "cdc_envelope_encode_roundtrip",  # tier 2: drifted (last green r13)
+    "cdc_incremental_agg_maintenance",  # tier 2: drifted (last green r13)
+    "cdc_incremental_convergence",  # tier 2: drifted (last green r13)
+    "cdc_lastwrite_materialize",  # tier 2: drifted (last green r13)
+    "cdc_offset_range_diff",  # tier 2: drifted (last green r13)
+    "cdc_scd2_history",  # tier 2: drifted (last green r13)
+    "cdc_scd2_point_in_time_join",  # tier 2: drifted (last green r13)
+    "cdc_schema_drift_decode",  # tier 2: drifted (last green r13)
+    "dedup_media_clusters",  # tier 2: drifted (last green r13)
+    "dedup_media_incremental",  # tier 2: drifted (last green r13)
+    "dedup_media_lsh",  # tier 2: drifted (last green r13)
+    "dedup_media_lsh_persisted",  # tier 2: drifted (last green r13)
+    "events_experiment_report",  # tier 2: drifted (last green r13)
+    "events_experiment_winsorized",  # tier 2: drifted (last green r13)
+    "events_funnel_time_to_convert",  # tier 2: drifted (last green r13)
+    "stats_ks_test",  # tier 2: drifted (last green r13)
+    "stats_mann_whitney_u",  # tier 2: drifted (last green r13)
+    "stream_experiment_snapshot",  # tier 2: drifted (last green r13)
+    "stream_srm_monitor",  # tier 2: drifted (last green r13)
+    "join_interval_overlap",  # tier 2: its closure holds _PRIORITY, so any re-splice drifts it
+    "text_source_divergence",  # tier 3: oldest-standing cert (r5)
+    "text_vocab_head_coverage",  # tier 3: oldest-standing cert (r5)
+    "udf_map_in_arrow",  # tier 3: oldest-standing cert (r5)
+    "agg_bitmap_exact_distinct",  # tier 3: oldest-standing cert (r6)
+    "agg_bool_and_or",  # tier 3: oldest-standing cert (r6)
+    "agg_skew_profile",  # tier 3: oldest-standing cert (r6)
+    "agg_string_concat_ordered",  # tier 3: oldest-standing cert (r6)
+    "corpus_chunk_documents",  # tier 3: oldest-standing cert (r6)
+    "corpus_length_bucketed_batches",  # tier 3: oldest-standing cert (r6)
+    "corpus_span_corruption_plan",  # tier 3: oldest-standing cert (r6)
+    "dedup_boilerplate_lines",  # tier 3: oldest-standing cert (r6)
+    "dedup_boilerplate_removal",  # tier 3: oldest-standing cert (r6)
+    "dq_null_profile",  # tier 3: oldest-standing cert (r6)
+    "events_anomaly_mad",  # tier 3: oldest-standing cert (r6)
+    "events_cumulative_unique_users",  # tier 3: oldest-standing cert (r6)
+    "events_multi_granularity_rollup",  # tier 3: oldest-standing cert (r6)
+    "events_seasonal_anomaly_hours",  # tier 3: oldest-standing cert (r6)
+    "events_seasonal_naive_eval",  # tier 3: oldest-standing cert (r6)
+    "fn_string_collation",  # tier 3: oldest-standing cert (r6)
+    "fn_url_parse",  # tier 3: oldest-standing cert (r6)
+    "fn_xml_parse",  # tier 3: oldest-standing cert (r6)
+    "graph_pagerank_trade",  # tier 3: oldest-standing cert (r6)
+    "join_asof_tolerance",  # tier 3: oldest-standing cert (r6)
+    "join_cross",  # tier 3: oldest-standing cert (r6)
 )
 
 

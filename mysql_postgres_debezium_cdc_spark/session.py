@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 from mysql_postgres_debezium_cdc_spark.registry import ensure_session_confs
 
 
+def _default_driver_memory() -> str:
+    """Half the host's RAM, capped at 48g: a heap sized past the host
+    lets one long-lived session (a whole test run) grow until the OS
+    kills its JVM."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, kb // 2048)}m"
+
+
 def get_session(app_name: str = "mysql-postgres-debezium-cdc-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -28,7 +40,10 @@ def get_session(app_name: str = "mysql-postgres-debezium-cdc-spark") -> SparkSes
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

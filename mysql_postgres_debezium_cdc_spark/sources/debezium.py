@@ -28,6 +28,13 @@ from pyspark.sql import types as T
 
 DEFAULT_PK = ("id",)  # reference default, Consumer.java:171
 
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote one identifier for a Spark SQL string, so that a
+    column such as ``kafka-partition`` or ``table`` parses as one name
+    under any parser conf."""
+    return "`" + name.replace("`", "``") + "`"
+
 SOURCE_SCHEMA = T.StructType(
     [
         T.StructField("db", T.StringType()),
@@ -71,50 +78,44 @@ def decode_envelope(
     isolation of Consumer.java:186-188 as a dead-letter column instead
     of a log line).
     """
-    schema = envelope_schema(row_schema)
-    wrapped_schema = T.StructType([T.StructField("payload", schema)])
-    # payload-or-root unwrap with ONE parse per row on the hot path: a
-    # cheap substring test picks which schema to try first (a JsonConverter
-    # schemas-enabled record must literally contain `"payload"`), and the
-    # lazily-evaluated coalesce only runs the second parse when the first
-    # guess yields nothing — a bare envelope whose row DATA happens to
-    # contain the string "payload", or a malformed record.  Outcomes are
-    # identical to parsing both ways; the steady-state JSON-parse CPU
-    # halves, which is the dominant decode cost on a real firehose.
-    # (Rebuilding one struct from fields of a nullable from_json result
-    # would trip a codegen NPE in Spark 4.1 when the parse returns null —
-    # branching between two whole-struct parses sidesteps it.)
-    #
-    # r13 (guide §5): the decode tree ships as SQL strings — the DSL
-    # form paid one py4j round trip per operator across the whole CDC
-    # family's builds; scripts/ab_cdc_expr_r13.py proves the analyzed
-    # plans identical modulo expression ids (the parametric row schema
-    # rides as its DDL `simpleString`, which parses back to the same
-    # all-nullable StructType).
-    sch = schema.simpleString()
-    wsch = wrapped_schema.simpleString()
-    looks_wrapped = f"CONTAINS({value_col}, '\"payload\"')"
-    parse_wrapped = f"from_json({value_col}, '{wsch}').payload"
-    parse_bare = f"from_json({value_col}, '{sch}')"
-    env = (
-        f"COALESCE(CASE WHEN {looks_wrapped} THEN {parse_wrapped}"
-        f" ELSE {parse_bare} END,"
-        f" CASE WHEN {looks_wrapped} THEN {parse_bare}"
-        f" ELSE {parse_wrapped} END)"
-    )
+    # One parse per row against one schema: the root envelope fields
+    # plus ``payload`` holding the same fields (a JsonConverter
+    # schemas-enabled record).  Each output field comes from ``payload``
+    # when it parsed to a struct, else from the root, so a bare envelope,
+    # ``"payload": null`` and ``"payload": "str"`` all read the root.
+    # The decode tree ships as one SQL string (one py4j round trip, not
+    # one per operator); the row schema rides as its DDL `simpleString`.
+    # Rows equal the two-parse form it replaced (3be9efc); re-prove with
+    # `scripts/ab.py 3be9efc cdc_lastwrite_materialize cdc_offset_range_diff`.
+    env = envelope_schema(row_schema)
+    sch = T.StructType([*env.fields, T.StructField("payload", env)]).simpleString()
+    value = quote_ident(value_col)
+
+    def field(path: str) -> str:
+        return f"IF(_env.payload IS NULL, _env.{path}, _env.payload.{path})"
+
+    # The topic's last dot-separated segment, with no escape in the
+    # literal (a '\\.' regex inverts under escapedStringLiterals).
     topic_table = (
-        f"element_at(split({topic_col}, '\\\\.'), -1)"
+        f"substring_index({quote_ident(topic_col)}, '.', -1)"
         if topic_col and topic_col in df.columns
         else "CAST(NULL AS STRING)"
     )
-    out = df.withColumn("_env", F.expr(env)).selectExpr(
+    # The parse is the output of a one-row generator, not a projected
+    # column: consumers filter on op/_error, and Catalyst pushes such a
+    # filter through a Project by inlining the parse into every
+    # reference, each pruned to its own schema so none is shared (13
+    # parses a row in cdc_lastwrite_materialize).  No predicate on a
+    # generator's output is pushed below it, so each record parses once.
+    parsed = f"explode(array(from_json({value}, '{sch}'))) AS _env"
+    out = df.selectExpr("*", parsed).selectExpr(
         "*",
-        "_env.op AS op",
-        "_env.before AS before",
-        "_env.after AS after",
-        "_env.source.db AS src_db",
-        f"COALESCE(_env.source.table, {topic_table}) AS src_table",
-        "_env.ts_ms AS ts_ms",
+        f"{field('op')} AS op",
+        f"{field('before')} AS before",
+        f"{field('after')} AS after",
+        f"{field('source.db')} AS src_db",
+        f"COALESCE({field('source.table')}, {topic_table}) AS src_table",
+        f"{field('ts_ms')} AS ts_ms",
     )
     # Tombstones (null/blank value, Consumer.java:133-136) are not errors;
     # anything else that yields no op is a poison record.  A PARSEABLE
@@ -128,13 +129,13 @@ def decode_envelope(
     # "Unknown op" at WARN and skips the record (Consumer.java:183-184);
     # surfacing the record as a queryable dead-letter ROW instead of a
     # log line is this framework's strengthening of that contract.
-    is_tombstone = f"(({value_col} IS NULL) OR (TRIM({value_col}) = ''))"
+    is_tombstone = f"(({value} IS NULL) OR (TRIM({value}) = ''))"
     return (
         out.selectExpr("*", f"{is_tombstone} AS _tombstone")
         .selectExpr(
             "*",
             f"CASE WHEN ((NOT {is_tombstone}) AND (op IS NULL)) THEN"
-            f" CONCAT('unparseable envelope: ', SUBSTRING({value_col}, 1, 120))"
+            f" CONCAT('unparseable envelope: ', SUBSTRING({value}, 1, 120))"
             f" WHEN ((NOT {is_tombstone}) AND"
             f" (NOT (op IN ('c', 'r', 'u', 'd')))) THEN"
             " CONCAT('unsupported op: ', op) END AS _error",

@@ -43,6 +43,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mysql_postgres_debezium_cdc_spark.sources.debezium import quote_ident
+
 IS_DELETE = "_is_delete"
 ORDER_COL = "_cdc_offset"
 
@@ -50,13 +52,6 @@ ORDER_COL = "_cdc_offset"
 # tables in markedly fewer bytes than Spark's snappy default, and bytes on
 # disk are what the sink's retention bound and fold rule are stated in.
 _STATE_CODEC = "zstd"
-
-
-def quote_ident(name: str) -> str:
-    """Backtick-quote one identifier for a Spark SQL string, so that a
-    column such as ``kafka-partition`` or ``table`` parses as one name
-    under any parser conf."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _pk_alias(col: str) -> str:
@@ -71,8 +66,9 @@ def with_change_columns(
 
     op dispatch mirrors Consumer.java:174-185: c/r/u → upsert,
     d → delete, anything else is dropped to the dead-letter filter."""
-    # r13 (guide §5): SQL strings, same trees (scripts/ab_cdc_expr_r13.py
-    # proves the analyzed plans identical modulo expression ids).
+    # r13 (guide §5): SQL strings, same trees: at a checkout of 65b16c2,
+    # `scripts/ab.py 65b16c2^ cdc_lastwrite_materialize cdc_offset_range_diff`
+    # shows the analyzed plans equal modulo expression ids.
     return (
         decoded.where("((_error IS NULL) AND (NOT _tombstone))")
         .where("op IN ('c', 'r', 'u', 'd')")
@@ -595,18 +591,9 @@ class MultiTableCdcRouter:
             F.col("_error").isNotNull() | (~F.col("_tombstone") & ~F.coalesce(known, F.lit(False)))
         )
 
-    def run_stream(self, raw_stream: DataFrame, checkpoint_dir: str, trigger_once: bool = True):
-        def sink_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            self.process_batch(batch_df)
-
-        writer = (
-            raw_stream.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    # The same foreachBatch driver; each micro-batch reaches the router's
+    # own process_batch.
+    run_stream = CdcPipeline.run_stream
 
     def read_state(self, src_table: str) -> DataFrame | None:
         return self.pipelines[src_table].sink.read()

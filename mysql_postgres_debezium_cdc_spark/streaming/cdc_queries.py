@@ -180,8 +180,9 @@ def _events_changelog(spark: SparkSession, sf_dir: str, lo: int | None = None, h
     # real Kafka/Debezium source arrives already partitioned and skips
     # this (see sources.parquet.spread_small_scan).
     ev = spread_small_scan(ev)
-    # r13 (guide §5): the envelope-encode tree as ONE SQL string
-    # (scripts/ab_cdc_expr_r13.py: analyzed plans identical modulo ids).
+    # r13 (guide §5): the envelope-encode tree as ONE SQL string; the
+    # analyzed plans of 65b16c2^ and 65b16c2 are equal modulo ids (at a
+    # checkout of 65b16c2: `scripts/ab.py 65b16c2^ cdc_lastwrite_materialize`).
     op = "CASE WHEN (event_type = 'error') THEN 'd' ELSE 'u' END"
     row_image = "STRUCT(user_id AS id, value AS v)"
     env = (

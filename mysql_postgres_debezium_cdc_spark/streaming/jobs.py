@@ -14,6 +14,11 @@ analogue with the same bound.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Sequence
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -148,8 +153,66 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    await_stream(q, timeout_s, f"stream {name!r}")
     return spark.table(name)
+
+
+def await_stream(q, timeout_s: int, what: str) -> None:
+    """Wait for an availableNow query to drain.  A query still running
+    after ``timeout_s`` is stopped and raises TimeoutError, so no caller
+    reports from a partial result; a failed query re-raises its error."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"{what} did not finish within {timeout_s} s — refusing to "
+            "report a partial result"
+        )
+    if q.exception() is not None:
+        raise q.exception()
+
+
+def fold_file_stream(
+    spark: SparkSession,
+    slices: str,
+    name: str,
+    pk_cols: Sequence[str],
+    row_cols: Sequence[str],
+    fold: Callable[..., None],
+    empty_ddl: str,
+) -> DataFrame:
+    """Drain the parquet files under ``slices`` as a file stream, one
+    file per micro-batch, through ``fold(sink, batch_df, batch_id)``
+    into a run-scoped ``ParquetStateSink`` keyed by ``pk_cols``, and
+    return the drained state's ``pk_cols + row_cols``.
+
+    The stream twins' shared driver.  The state is pinned to the
+    session block store (an empty ``empty_ddl`` frame when no batch
+    committed), so the run's state and checkpoint dirs are removed
+    before this returns."""
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import ParquetStateSink
+
+    run = (
+        f"{tempfile.gettempdir()}/spark_graft_stream_{name}_"
+        f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex}"
+    )
+    try:
+        sink = ParquetStateSink(spark, f"{run}/state", pk_cols=pk_cols, row_cols=row_cols)
+        q = (
+            spark.readStream.schema(spark.read.parquet(slices).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(slices)
+            .writeStream.foreachBatch(lambda df, batch_id: fold(sink, df, batch_id))
+            .option("checkpointLocation", f"{run}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_stream(q, 300, f"{name}: streaming fold")
+        state = sink.read()
+        if state is None:  # zero micro-batches committed (empty source)
+            return spark.createDataFrame([], empty_ddl)
+        return state.select(*pk_cols, *row_cols).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(run, ignore_errors=True)
 
 
 USER_STATE_OUTPUT = T.StructType(

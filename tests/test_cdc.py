@@ -517,3 +517,109 @@ def test_offset_range_diff_invariants(spark):
     assert diff == expected
     # unchanged keys never appear
     assert not [k for k in diff if k in at_t and k in at_end and at_t[k] == at_end[k] and diff[k][0] != "update"]
+
+
+# One record per envelope shape decode_envelope must tell apart, with the
+# (op, before, after, src_db, src_table, ts_ms, _tombstone, _error) each
+# must decode to under the row schema `id bigint, name string`.
+_EDGE_ROW = T.StructType(
+    [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+)
+_EDGE_CASES = [
+    # payload-wrapped
+    ('{"payload": {"op": "c", "after": {"id": 1, "name": "a"}, '
+     '"source": {"db": "app", "table": "t"}, "ts_ms": 5}}',
+     ("c", None, (1, "a"), "app", "t", 5, False, None)),
+    # bare
+    ('{"op": "u", "before": {"id": 2, "name": "b"}, "after": {"id": 2, "name": "c"}, '
+     '"source": {"db": "app", "table": "t"}, "ts_ms": 6}',
+     ("u", (2, "b"), (2, "c"), "app", "t", 6, False, None)),
+    # "payload": null reads the root
+    ('{"payload": null, "op": "c", "after": {"id": 3, "name": "n"}, "ts_ms": 7}',
+     ("c", None, (3, "n"), None, "orders", 7, False, None)),
+    # "payload" that is no object reads the root
+    ('{"payload": "str", "op": "d", "before": {"id": 4, "name": "s"}}',
+     ("d", (4, "s"), None, None, "orders", None, False, None)),
+    # a "payload" key inside the row data is row data
+    ('{"op": "c", "after": {"id": 5, "name": "x", "payload": {"op": "d"}}}',
+     ("c", None, (5, "x"), None, "orders", None, False, None)),
+    # root and payload fields both present: payload wins
+    ('{"op": "d", "before": {"id": 60}, '
+     '"payload": {"op": "c", "after": {"id": 6, "name": "p"}, "ts_ms": 8}}',
+     ("c", None, (6, "p"), None, "orders", 8, False, None)),
+    # malformed
+    ('{"op": "c", "after": {"id": 7,',
+     (None, None, None, None, "orders", None, False,
+      'unparseable envelope: {"op": "c", "after": {"id": 7,')),
+    # blank and null values are tombstones
+    ("   ", (None, None, None, None, "orders", None, True, None)),
+    (None, (None, None, None, None, "orders", None, True, None)),
+    # a JSON array and a JSON scalar are no envelope
+    ('[{"op": "c", "after": {"id": 9}}]',
+     (None, None, None, None, "orders", None, False,
+      'unparseable envelope: [{"op": "c", "after": {"id": 9}}]')),
+    ("42", (None, None, None, None, "orders", None, False, "unparseable envelope: 42")),
+    # parseable, but an op the replica does not apply
+    ('{"op": "t", "source": {"db": "app", "table": "t"}}',
+     ("t", None, None, "app", "t", None, False, "unsupported op: t")),
+    # type mismatches null the field, not the record
+    ('{"op": "c", "after": {"id": 1.7, "name": "m"}}',
+     ("c", None, (None, "m"), None, "orders", None, False, None)),
+    ('{"op": "c", "after": "not a row", "source": {"db": "app"}}',
+     ("c", None, None, "app", "orders", None, False, None)),
+]
+
+
+def _edge_frame(spark, value_col="value", topic_col="topic"):
+    return spark.createDataFrame(
+        [(v, "dbserver1.app.orders", i) for i, (v, _) in enumerate(_EDGE_CASES)],
+        f"`{value_col}` string, `{topic_col}` string, offset bigint",
+    )
+
+
+def _decoded_rows(decoded):
+    out = decoded.orderBy("offset").select(
+        "op", "before", "after", "src_db", "src_table", "ts_ms", "_tombstone", "_error"
+    )
+    return [
+        tuple(tuple(v) if isinstance(v, T.Row) else v for v in r) for r in out.collect()
+    ]
+
+
+@pytest.mark.parametrize(
+    "escaped_literals,value_col,topic_col",
+    [(False, "value", "topic"), (True, "kafka-value", "select")],
+)
+def test_decode_envelope_edge_matrix(spark, escaped_literals, value_col, topic_col):
+    """Every envelope shape decodes to fixed fields, also with column
+    names that are no identifiers and under escaped string literals
+    (where a '\\.' topic split would invert), and the decoded frame
+    compacts without error."""
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(escaped_literals).lower())
+    try:
+        decoded = decode_envelope(
+            _edge_frame(spark, value_col, topic_col),
+            _EDGE_ROW,
+            value_col=value_col,
+            topic_col=topic_col,
+        )
+        assert _decoded_rows(decoded) == [want for _, want in _EDGE_CASES]
+        kept = compact(with_change_columns(decoded), ["id"]).select("_pk_id", "_cdc_offset")
+        assert sorted(map(tuple, kept.collect()), key=str) == [
+            (1, 0), (2, 1), (3, 2), (4, 3), (5, 4), (6, 5), (None, 13),
+        ]
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_decode_plan_parses_json_once(spark):
+    """The optimized decode plan parses each record once: one from_json,
+    whether the record is payload-wrapped or bare, and still one once
+    the change-column and table filters sit on top of it."""
+    decoded = decode_envelope(_edge_frame(spark), _EDGE_ROW)
+    filtered = with_change_columns(decoded).where(F.col("src_table") == "orders")
+    for frame in (decoded, filtered):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json(") == 1, plan

@@ -344,3 +344,23 @@ def test_rate_ratio_counts_stream_equals_batch(spark):
     stream = jobs.run_to_memory(spark, agg, "t_rate_counts")
     cols = ("event_type", "n1", "n2")
     assert rows(stream, *cols) == rows(batch, *cols)
+
+
+def test_run_to_memory_times_out_instead_of_returning_partial(spark, tmp_path):
+    """A stream still running at its timeout must not hand back the
+    memory table's partial contents as if it had drained: the query is
+    stopped and the call raises TimeoutError."""
+    import time
+
+    import pytest
+
+    spark.range(1).write.parquet(str(tmp_path / "src"))
+    slow = F.udf(lambda i: time.sleep(6) or i, "bigint")
+    stream = (
+        spark.readStream.schema("id bigint")
+        .parquet(str(tmp_path / "src"))
+        .select(slow("id").alias("id"))
+    )
+    with pytest.raises(TimeoutError, match="t_slow"):
+        jobs.run_to_memory(spark, stream, "t_slow", output_mode="append", timeout_s=1)
+    assert all(q.name != "t_slow" for q in spark.streams.active)
