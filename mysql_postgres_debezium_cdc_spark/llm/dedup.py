@@ -1161,16 +1161,9 @@ def _dedup_pair_fold(sink, pairs: DataFrame, batch_id: int) -> None:
     to the same state a single delivery would (the device [[_srm_fold]]
     proved for enrollment state; contrast the generation keying
     ADDITIVE state needs, [[_experiment_fold]])."""
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import IS_DELETE, ORDER_COL
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import change_rows
 
-    compacted = pairs.select(
-        F.col("new_doc").alias("_pk_new_doc"),
-        F.col("dup_doc").alias("_pk_dup_doc"),
-        F.lit(False).alias(IS_DELETE),
-        F.struct("jaccard").alias("after"),
-        F.lit(int(batch_id)).cast("long").alias(ORDER_COL),
-    )
-    sink.merge(compacted)
+    sink.merge(change_rows(pairs, ("new_doc", "dup_doc"), ("jaccard",), batch_id))
 
 
 @register(

@@ -1279,11 +1279,8 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: sessions and buckets are narrow derivations; the
     equi-join shuffles on bucket (hash-parallel, calendar-domain keys);
     busy is |types|·{BUSY_TOPN} rows and broadcasts."""
-    from mysql_postgres_debezium_cdc_spark.registry import all_queries
-
     sess = (
-        all_queries()["events_sessionize_gap"]
-        .fn(spark, sf_dir)
+        events_sessionize_gap(spark, sf_dir)
         .select(
             "user_id",
             "session_idx",
@@ -2512,15 +2509,15 @@ def _experiment_report_from_per_user(per_user: DataFrame) -> DataFrame:
 _SRM_CHI2_001_E6 = 10_827_566  # round(10.827566... * 1e6)
 
 
-@register(
-    "events_srm_check",
-    oracle=f"""
-    WITH arms AS (
+# The SRM trio (events_srm_check, events_srm_sequential,
+# stream_srm_monitor) shares one arm count and one definition of each
+# verdict set, in DuckDB SQL fragments here and in Spark columns
+# ([[_srm_arms]], [[_srm_chi2_cols]], [[_srm_sequential_cols]]).
+_SRM_ARMS_SQL = """
       SELECT CAST(COUNT(*) FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS nt,
              CAST(COUNT(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS nc
-      FROM (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL)
-    )
-    SELECT nt AS n_treat, nc AS n_ctrl,
+      FROM (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL)"""
+_SRM_CHI2_SQL = f"""
            CASE WHEN nt + nc > 0 THEN
              ROUND(CAST(nt AS DOUBLE) / (nt + nc), 6) END AS ratio_treat,
            CASE WHEN nt + nc > 0 THEN
@@ -2529,7 +2526,57 @@ _SRM_CHI2_001_E6 = 10_827_566  # round(10.827566... * 1e6)
            CASE WHEN nt + nc > 0 THEN
              CAST((nt - nc) AS HUGEINT) * (nt - nc) * 1000000
                > CAST({_SRM_CHI2_001_E6} AS HUGEINT) * (nt + nc)
-           END AS srm_detected
+           END AS srm_detected"""
+
+
+def _srm_enrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per enrolled (non-null) user id of the events fixture."""
+    return (
+        load(spark, sf_dir, "events")
+        .where(F.col("user_id").isNotNull())
+        .select("user_id")
+        .distinct()
+    )
+
+
+def _srm_arms(users: DataFrame, *verdicts) -> DataFrame:
+    """The SRM arm counts over ``users`` (one row per enrolled user):
+    nt = odd user ids (treatment), nc = even (control), read out as
+    (n_treat, n_ctrl, *verdicts) with the verdict columns over nt/nc."""
+    arms = users.agg(
+        F.count(F.when(F.col("user_id") % 2 == 1, 1)).cast("bigint").alias("nt"),
+        F.count(F.when(F.col("user_id") % 2 == 0, 1)).cast("bigint").alias("nc"),
+    )
+    return arms.select(
+        F.col("nt").alias("n_treat"), F.col("nc").alias("n_ctrl"), *verdicts
+    )
+
+
+def _srm_chi2_cols() -> list:
+    """[[events_srm_check]]'s verdict columns over the (nt, nc) row."""
+    nt, nc = F.col("nt"), F.col("nc")
+    tot = nt + nc
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    return [
+        F.when(tot > 0, F.round(nt.cast("double") / tot, 6)).alias("ratio_treat"),
+        F.when(
+            tot > 0,
+            F.round(((nt - nc) * (nt - nc)).cast("double") / tot, 4),
+        ).alias("chi2"),
+        F.when(
+            tot > 0,
+            dec(nt - nc) * (nt - nc) * 1000000
+            > dec(F.lit(_SRM_CHI2_001_E6)) * tot,
+        ).alias("srm_detected"),
+    ]
+
+
+@register(
+    "events_srm_check",
+    oracle=f"""
+    WITH arms AS ({_SRM_ARMS_SQL}
+    )
+    SELECT nt AS n_treat, nc AS n_ctrl,{_SRM_CHI2_SQL}
     FROM arms
     """,
     tags=("behavioral", "stats", "experiment", "dq"),
@@ -2553,37 +2600,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one DISTINCT over (user-bounded) ids — the same
     map-side-combined shape as [[events_cumulative_unique_users]] —
     then a 1-row conditional count.  No window, no join."""
-    arms = (
-        load(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .agg(
-            F.count(F.when(F.col("user_id") % 2 == 1, 1))
-            .cast("bigint")
-            .alias("nt"),
-            F.count(F.when(F.col("user_id") % 2 == 0, 1))
-            .cast("bigint")
-            .alias("nc"),
-        )
-    )
-    nt, nc = F.col("nt"), F.col("nc")
-    tot = nt + nc
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    return arms.select(
-        nt.alias("n_treat"),
-        nc.alias("n_ctrl"),
-        F.when(tot > 0, F.round(nt.cast("double") / tot, 6)).alias("ratio_treat"),
-        F.when(
-            tot > 0,
-            F.round(((nt - nc) * (nt - nc)).cast("double") / tot, 4),
-        ).alias("chi2"),
-        F.when(
-            tot > 0,
-            dec(nt - nc) * (nt - nc) * 1000000
-            > dec(F.lit(_SRM_CHI2_001_E6)) * tot,
-        ).alias("srm_detected"),
-    )
+    return _srm_arms(_srm_enrolled(spark, sf_dir), *_srm_chi2_cols())
 
 
 # Shared literal constants for the sequential SRM mixture test — the SAME
@@ -2632,28 +2649,51 @@ def _lgamma_col(x):
 
 
 
-@register(
-    "events_srm_sequential",
-    oracle=f"""
-    WITH arms AS (
-      SELECT CAST(COUNT(*) FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS nt,
-             CAST(COUNT(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS nc
-      FROM (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL)
-    ),
-    bf AS (
+_SRM_BF_SQL = f"""
       SELECT nt, nc,
              {_lgamma_sql("(CAST(nt AS DOUBLE) + 1.0)")}
              + {_lgamma_sql("(CAST(nc AS DOUBLE) + 1.0)")}
              - {_lgamma_sql("(CAST(nt + nc AS DOUBLE) + 2.0)")}
              + CAST(nt + nc AS DOUBLE) * {_LN_2} AS log_bf
-      FROM arms
-    )
-    SELECT nt AS n_treat, nc AS n_ctrl,
+      FROM arms"""
+_SRM_SEQUENTIAL_SQL = f"""
            CASE WHEN nt + nc > 0 THEN ROUND(log_bf, 6) END AS log_bf,
            CASE WHEN nt + nc > 0 THEN
              ROUND(LEAST(1.0, EXP(-ROUND(log_bf, 6))), 6) END AS p_always_valid,
            CASE WHEN nt + nc > 0 THEN ROUND(log_bf, 6) > {_LN_1000}
-           END AS srm_sequential
+           END AS srm_sequential"""
+
+
+def _srm_sequential_cols() -> list:
+    """[[events_srm_sequential]]'s verdict columns over the (nt, nc) row."""
+    nt, nc = F.col("nt"), F.col("nc")
+    tot = nt + nc
+    log_bf = (
+        _lgamma_col(nt.cast("double") + F.lit(1.0))
+        + _lgamma_col(nc.cast("double") + F.lit(1.0))
+        - _lgamma_col(tot.cast("double") + F.lit(2.0))
+        + tot.cast("double") * F.lit(float(_LN_2))
+    )
+    return [
+        F.when(tot > 0, F.round(log_bf, 6)).alias("log_bf"),
+        F.when(
+            tot > 0,
+            F.round(F.least(F.lit(1.0), F.exp(-F.round(log_bf, 6))), 6),
+        ).alias("p_always_valid"),
+        F.when(tot > 0, F.round(log_bf, 6) > F.lit(float(_LN_1000))).alias(
+            "srm_sequential"
+        ),
+    ]
+
+
+@register(
+    "events_srm_sequential",
+    oracle=f"""
+    WITH arms AS ({_SRM_ARMS_SQL}
+    ),
+    bf AS ({_SRM_BF_SQL}
+    )
+    SELECT nt AS n_treat, nc AS n_ctrl,{_SRM_SEQUENTIAL_SQL}
     FROM bf
     """,
     tags=("behavioral", "stats", "experiment", "dq", "sequential"),
@@ -2697,40 +2737,7 @@ def events_srm_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, no join; the formula consumes only the two exact BIGINT
     arm counts, so at 100 TB the test costs exactly what the χ² gate
     costs."""
-    arms = (
-        load(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select("user_id")
-        .distinct()
-        .agg(
-            F.count(F.when(F.col("user_id") % 2 == 1, 1))
-            .cast("bigint")
-            .alias("nt"),
-            F.count(F.when(F.col("user_id") % 2 == 0, 1))
-            .cast("bigint")
-            .alias("nc"),
-        )
-    )
-    nt, nc = F.col("nt"), F.col("nc")
-    tot = nt + nc
-    log_bf = (
-        _lgamma_col(nt.cast("double") + F.lit(1.0))
-        + _lgamma_col(nc.cast("double") + F.lit(1.0))
-        - _lgamma_col(tot.cast("double") + F.lit(2.0))
-        + tot.cast("double") * F.lit(float(_LN_2))
-    )
-    return arms.select(
-        nt.alias("n_treat"),
-        nc.alias("n_ctrl"),
-        F.when(tot > 0, F.round(log_bf, 6)).alias("log_bf"),
-        F.when(
-            tot > 0,
-            F.round(F.least(F.lit(1.0), F.exp(-F.round(log_bf, 6))), 6),
-        ).alias("p_always_valid"),
-        F.when(tot > 0, F.round(log_bf, 6) > F.lit(float(_LN_1000))).alias(
-            "srm_sequential"
-        ),
-    )
+    return _srm_arms(_srm_enrolled(spark, sf_dir), *_srm_sequential_cols())
 
 
 def _msprt_sql(nt, nc, st, sc, sst, ssc):
@@ -3310,6 +3317,7 @@ def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 STREAM_EXP_SLICES = 4  # staged event files = streaming micro-batches
 STREAM_EXP_COMPACT_EVERY = 2  # live compaction cadence (micro-batches)
+_EXP_STATE_PK = ("batch_id", "user_id")  # generation-keyed experiment state
 
 
 def _experiment_fold(sink, batch_df: DataFrame, batch_id: int) -> None:
@@ -3334,15 +3342,12 @@ def _experiment_fold_rows(batch_df: DataFrame, batch_id: int) -> DataFrame:
     """The fold MERGE source for one micro-batch — factored from
     [[_experiment_fold]] so the compaction cadence can land fold and
     compaction in ONE atomic commit (r12)."""
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import IS_DELETE, ORDER_COL
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import change_rows
 
-    return _experiment_per_user(batch_df).select(
-        F.lit(int(batch_id)).cast("long").alias("_pk_batch_id"),
-        F.col("user_id").alias("_pk_user_id"),
-        F.lit(False).alias(IS_DELETE),
-        F.struct("x", "y").alias("after"),
-        F.lit(int(batch_id)).cast("long").alias(ORDER_COL),
+    per_user = _experiment_per_user(batch_df).withColumn(
+        "batch_id", F.lit(int(batch_id)).cast("long")
     )
+    return change_rows(per_user, _EXP_STATE_PK, ("x", "y"), batch_id)
 
 
 def _experiment_state_compact(sink, horizon: int) -> None:
@@ -3374,29 +3379,18 @@ def _experiment_compact_rows(sink, horizon: int) -> DataFrame | None:
     the re-aggregated base upserts) — factored from
     [[_experiment_state_compact]] so the live cadence can union it with
     the fold rows into ONE commit (r12); None when no state exists."""
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import IS_DELETE, ORDER_COL
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import change_rows
 
     state = sink.read()
     if state is None:
         return None
     old = state.where(F.col("batch_id") <= F.lit(int(horizon)))
-    base = old.groupBy("user_id").agg(
-        F.sum("x").cast("bigint").alias("x"),
-        F.sum("y").cast("bigint").alias("y"),
+    base = _experiment_state_per_user(old).withColumn(
+        "batch_id", F.lit(-1).cast("long")
     )
-    upserts = base.select(
-        F.lit(-1).cast("long").alias("_pk_batch_id"),
-        F.col("user_id").alias("_pk_user_id"),
-        F.lit(False).alias(IS_DELETE),
-        F.struct("x", "y").alias("after"),
-        F.lit(int(horizon)).cast("long").alias(ORDER_COL),
-    )
-    deletes = old.where(F.col("batch_id") != -1).select(
-        F.col("batch_id").alias("_pk_batch_id"),
-        F.col("user_id").alias("_pk_user_id"),
-        F.lit(True).alias(IS_DELETE),
-        F.struct("x", "y").alias("after"),
-        F.lit(int(horizon)).cast("long").alias(ORDER_COL),
+    upserts = change_rows(base, _EXP_STATE_PK, ("x", "y"), horizon)
+    deletes = change_rows(
+        old.where(F.col("batch_id") != -1), _EXP_STATE_PK, ("x", "y"), horizon, delete=True
     )
     return deletes.unionByName(upserts)
 
@@ -3508,7 +3502,7 @@ def stream_experiment_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _exp_stream_slices(spark, sf_dir),
         "exp",
-        ("batch_id", "user_id"),
+        _EXP_STATE_PK,
         ("x", "y"),
         _experiment_fold_with_compaction,
         "batch_id bigint, user_id bigint, x bigint, y bigint",
@@ -3543,25 +3537,28 @@ def _srm_fold(sink, batch_df: DataFrame, batch_id: int) -> None:
     construction (the redelivered batch upserts the same user keys), so
     unlike [[_experiment_fold]]'s additive sums it needs NO generation
     keying — the natural pk (user_id) is already exactly-once."""
-    from mysql_postgres_debezium_cdc_spark.streaming.cdc import IS_DELETE, ORDER_COL
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import change_rows
 
-    compacted = (
+    users = (
         batch_df.where(F.col("user_id").isNotNull())
         .select("user_id")
         .distinct()
-        .select(
-            F.col("user_id").alias("_pk_user_id"),
-            F.lit(False).alias(IS_DELETE),
-            F.struct((F.col("user_id") % 2).alias("arm")).alias("after"),
-            F.lit(int(batch_id)).cast("long").alias(ORDER_COL),
-        )
+        .withColumn("arm", F.col("user_id") % 2)
     )
-    sink.merge(compacted)
+    sink.merge(change_rows(users, ("user_id",), ("arm",), batch_id))
 
 
 @register(
     "stream_srm_monitor",
-    oracle="{SRM}",  # bound below: the batch SRM oracle certifies the stream
+    # The column-union of the two batch SRM oracles, from their fragments.
+    oracle=f"""
+    WITH arms AS ({_SRM_ARMS_SQL}
+    ),
+    bf AS ({_SRM_BF_SQL}
+    )
+    SELECT nt AS n_treat, nc AS n_ctrl,{_SRM_CHI2_SQL},{_SRM_SEQUENTIAL_SQL}
+    FROM bf
+    """,
     tags=("behavioral", "stats", "experiment", "streaming", "dq"),
     bench=True,  # r12: completes wall-time tracking for the experiment family
 )
@@ -3602,9 +3599,9 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the analysis-time (single-look) diagnostic; ``srm_sequential`` is
     the verdict a live pager should act on.  Both are pure column math
     over the same (nt, nc) scalar row — no new shuffle — via the shared
-    fixed double tree [[_lgamma_col]]/[[_lgamma_sql]], and the bound
-    oracle replays the column-union of the two batch oracles from the
-    identical literals."""
+    fixed double tree [[_lgamma_col]]/[[_lgamma_sql]], and the oracle
+    is the column-union of the two batch oracles, composed from their
+    SQL fragments."""
     from mysql_postgres_debezium_cdc_spark.streaming.jobs import fold_file_stream
 
     state = fold_file_stream(
@@ -3616,88 +3613,7 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _srm_fold,
         "user_id bigint, arm bigint",
     )
-    arms = state.agg(
-        F.count(F.when(F.col("arm") == 1, 1)).cast("bigint").alias("nt"),
-        F.count(F.when(F.col("arm") == 0, 1)).cast("bigint").alias("nc"),
-    )
-    nt, nc = F.col("nt"), F.col("nc")
-    tot = nt + nc
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    log_bf = (
-        _lgamma_col(nt.cast("double") + F.lit(1.0))
-        + _lgamma_col(nc.cast("double") + F.lit(1.0))
-        - _lgamma_col(tot.cast("double") + F.lit(2.0))
-        + tot.cast("double") * F.lit(float(_LN_2))
-    )
-    return arms.select(
-        nt.alias("n_treat"),
-        nc.alias("n_ctrl"),
-        F.when(tot > 0, F.round(nt.cast("double") / tot, 6)).alias("ratio_treat"),
-        F.when(
-            tot > 0,
-            F.round(((nt - nc) * (nt - nc)).cast("double") / tot, 4),
-        ).alias("chi2"),
-        F.when(
-            tot > 0,
-            dec(nt - nc) * (nt - nc) * 1000000
-            > dec(F.lit(_SRM_CHI2_001_E6)) * tot,
-        ).alias("srm_detected"),
-        F.when(tot > 0, F.round(log_bf, 6)).alias("log_bf"),
-        F.when(
-            tot > 0,
-            F.round(F.least(F.lit(1.0), F.exp(-F.round(log_bf, 6))), 6),
-        ).alias("p_always_valid"),
-        F.when(tot > 0, F.round(log_bf, 6) > F.lit(float(_LN_1000))).alias(
-            "srm_sequential"
-        ),
-    )
-
-
-def _bind_stream_srm_oracle() -> None:
-    """Bind the stream monitor's oracle as the COLUMN-UNION of the two
-    batch SRM oracles ([[events_srm_check]]'s exact-integer χ² columns
-    + [[events_srm_sequential]]'s shared-double-tree mSPRT columns),
-    built from the same module-level literals (`_lgamma_sql`, `_LN_2`,
-    `_LN_1000`, `_SRM_CHI2_001_E6`) so the batch keys certify the
-    stream bit-for-bit (VERDICT r10 task #2)."""
-    from mysql_postgres_debezium_cdc_spark.registry import _REGISTRY
-
-    composite = f"""
-    WITH arms AS (
-      SELECT CAST(COUNT(*) FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS nt,
-             CAST(COUNT(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS nc
-      FROM (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL)
-    ),
-    bf AS (
-      SELECT nt, nc,
-             {_lgamma_sql("(CAST(nt AS DOUBLE) + 1.0)")}
-             + {_lgamma_sql("(CAST(nc AS DOUBLE) + 1.0)")}
-             - {_lgamma_sql("(CAST(nt + nc AS DOUBLE) + 2.0)")}
-             + CAST(nt + nc AS DOUBLE) * {_LN_2} AS log_bf
-      FROM arms
-    )
-    SELECT nt AS n_treat, nc AS n_ctrl,
-           CASE WHEN nt + nc > 0 THEN
-             ROUND(CAST(nt AS DOUBLE) / (nt + nc), 6) END AS ratio_treat,
-           CASE WHEN nt + nc > 0 THEN
-             ROUND(CAST((nt - nc) * (nt - nc) AS DOUBLE) / (nt + nc), 4)
-           END AS chi2,
-           CASE WHEN nt + nc > 0 THEN
-             CAST((nt - nc) AS HUGEINT) * (nt - nc) * 1000000
-               > CAST({_SRM_CHI2_001_E6} AS HUGEINT) * (nt + nc)
-           END AS srm_detected,
-           CASE WHEN nt + nc > 0 THEN ROUND(log_bf, 6) END AS log_bf,
-           CASE WHEN nt + nc > 0 THEN
-             ROUND(LEAST(1.0, EXP(-ROUND(log_bf, 6))), 6) END AS p_always_valid,
-           CASE WHEN nt + nc > 0 THEN ROUND(log_bf, 6) > {_LN_1000}
-           END AS srm_sequential
-    FROM bf
-    """
-    spec = _REGISTRY["stream_srm_monitor"]
-    object.__setattr__(spec, "oracle", spec.oracle.replace("{SRM}", composite))
-
-
-_bind_stream_srm_oracle()
+    return _srm_arms(state, *_srm_chi2_cols(), *_srm_sequential_cols())
 
 
 @register(

@@ -70,14 +70,17 @@ _LOADED = False
 # code.
 #
 # Current prefix, mechanically derived by `scripts/drift_audit.py` after
-# the one-parse envelope decode and the shared stream-twin driver (the
-# round-13 prefix is in git history):
-#   1. Tier 2: the 26 keys drifted past their last green row — the CDC
-#      family (decode_envelope now parses once), the three stream twins
-#      (one fold driver), and the r13 expression-string rewrites the r13
-#      driver rows predate.  Every one was value-checked against its
-#      unchanged DuckDB oracle (`scripts/sweep_parity.py`) — this queue
-#      is the driver-row refresh, not suspicion.
+# the stream/batch twins were folded onto one definition each (the
+# previous prefix is in git history):
+#   1. Tier 2: the 37 keys drifted past their last green row — the
+#      registered streaming twins that now call their live jobs'
+#      functions, the SRM trio (one arm count, one definition of each
+#      verdict set), the CDC family (reserved-keyword-safe decode), the
+#      stream folds (one state-sink row builder), and the r13
+#      expression-string rewrites the r13 driver rows predate.  Every
+#      one was value-checked against its DuckDB oracle
+#      (`scripts/sweep_parity.py`) — this queue is the driver-row
+#      refresh, not suspicion.
 #   2. Tier 3: remaining slots fill with the oldest-standing green certs
 #      (r5/r6 vintage), the audit's proxy for helper drift its closure
 #      analysis cannot see.
@@ -85,6 +88,14 @@ _LOADED = False
 # (tests/test_oracle_parity.py), which sweeps all registered keys every
 # round regardless of prefix.
 _PRIORITY: tuple[str, ...] = (
+    "stream_windowed_topk",  # tier 2: drifted (last green r7)
+    "events_srm_check",  # tier 2: drifted (last green r8)
+    "stream_sliding_window",  # tier 2: drifted (last green r9)
+    "stream_user_running_state",  # tier 2: drifted (last green r9)
+    "events_srm_sequential",  # tier 2: drifted (last green r11)
+    "stream_session_window",  # tier 2: drifted (last green r11)
+    "stream_stream_join_attribution",  # tier 2: drifted (last green r11)
+    "stream_tumbling_window",  # tier 2: drifted (last green r11)
     "stream_incremental_dedup",  # tier 2: drifted (last green r12)
     "ann_ivf_recall_eval",  # tier 2: drifted (last green r13)
     "ann_ivf_topk",  # tier 2: drifted (last green r13)
@@ -106,11 +117,14 @@ _PRIORITY: tuple[str, ...] = (
     "events_experiment_report",  # tier 2: drifted (last green r13)
     "events_experiment_winsorized",  # tier 2: drifted (last green r13)
     "events_funnel_time_to_convert",  # tier 2: drifted (last green r13)
+    "join_interval_overlap",  # tier 2: drifted (last green r13)
     "stats_ks_test",  # tier 2: drifted (last green r13)
     "stats_mann_whitney_u",  # tier 2: drifted (last green r13)
     "stream_experiment_snapshot",  # tier 2: drifted (last green r13)
     "stream_srm_monitor",  # tier 2: drifted (last green r13)
-    "join_interval_overlap",  # tier 2: its closure holds _PRIORITY, so any re-splice drifts it
+    "stream_static_enrichment",  # tier 2: drifted (last green r13)
+    "stream_stream_join_left_outer",  # tier 2: drifted (last green r13)
+    "stream_user_running_state_stateful",  # tier 2: drifted (last green r13)
     "text_source_divergence",  # tier 3: oldest-standing cert (r5)
     "text_vocab_head_coverage",  # tier 3: oldest-standing cert (r5)
     "udf_map_in_arrow",  # tier 3: oldest-standing cert (r5)
@@ -124,17 +138,6 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_boilerplate_lines",  # tier 3: oldest-standing cert (r6)
     "dedup_boilerplate_removal",  # tier 3: oldest-standing cert (r6)
     "dq_null_profile",  # tier 3: oldest-standing cert (r6)
-    "events_anomaly_mad",  # tier 3: oldest-standing cert (r6)
-    "events_cumulative_unique_users",  # tier 3: oldest-standing cert (r6)
-    "events_multi_granularity_rollup",  # tier 3: oldest-standing cert (r6)
-    "events_seasonal_anomaly_hours",  # tier 3: oldest-standing cert (r6)
-    "events_seasonal_naive_eval",  # tier 3: oldest-standing cert (r6)
-    "fn_string_collation",  # tier 3: oldest-standing cert (r6)
-    "fn_url_parse",  # tier 3: oldest-standing cert (r6)
-    "fn_xml_parse",  # tier 3: oldest-standing cert (r6)
-    "graph_pagerank_trade",  # tier 3: oldest-standing cert (r6)
-    "join_asof_tolerance",  # tier 3: oldest-standing cert (r6)
-    "join_cross",  # tier 3: oldest-standing cert (r6)
 )
 
 

@@ -84,14 +84,18 @@ def decode_envelope(
     # when it parsed to a struct, else from the root, so a bare envelope,
     # ``"payload": null`` and ``"payload": "str"`` all read the root.
     # The decode tree ships as one SQL string (one py4j round trip, not
-    # one per operator); the row schema rides as its DDL `simpleString`.
+    # one per operator).  The schema rides in its JSON form, and field
+    # paths are backtick-quoted: the DDL form and bare paths fail to
+    # parse on a field such as `table` under
+    # spark.sql.ansi.enforceReservedKeywords=true.
     # Rows equal the two-parse form it replaced (3be9efc); re-prove with
     # `scripts/ab.py 3be9efc cdc_lastwrite_materialize cdc_offset_range_diff`.
     env = envelope_schema(row_schema)
-    sch = T.StructType([*env.fields, T.StructField("payload", env)]).simpleString()
+    sch = T.StructType([*env.fields, T.StructField("payload", env)]).json()
     value = quote_ident(value_col)
 
     def field(path: str) -> str:
+        path = ".".join(map(quote_ident, path.split(".")))
         return f"IF(_env.payload IS NULL, _env.{path}, _env.payload.{path})"
 
     # The topic's last dot-separated segment, with no escape in the

@@ -43,6 +43,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mysql_postgres_debezium_cdc_spark.sources import debezium
 from mysql_postgres_debezium_cdc_spark.sources.debezium import quote_ident
 
 IS_DELETE = "_is_delete"
@@ -76,6 +77,26 @@ def with_change_columns(
         .selectExpr(
             "*", f"CAST({quote_ident(offset_col)} AS LONG) AS {quote_ident(ORDER_COL)}"
         )
+    )
+
+
+def change_rows(
+    frame: DataFrame,
+    pk_cols: Sequence[str],
+    row_cols: Sequence[str],
+    offset: int,
+    delete: bool = False,
+) -> DataFrame:
+    """``frame``'s rows as compacted changes, the shape ``apply_changes``
+    and the state sinks' ``merge`` read: one ``_pk_<c>`` per key column,
+    the delete flag, an ``after`` struct of ``row_cols`` and ``offset``
+    as every row's source offset.  For state that a job keys itself
+    rather than decoding it from change events."""
+    return frame.select(
+        *[F.col(c).alias(_pk_alias(c)) for c in pk_cols],
+        F.lit(delete).alias(IS_DELETE),
+        F.struct(*row_cols).alias("after"),
+        F.lit(int(offset)).cast("long").alias(ORDER_COL),
     )
 
 
@@ -507,11 +528,10 @@ class CdcPipeline:
         self.sink = sink or ParquetStateSink(spark, state_root, pk_cols, row_cols)
 
     def decode(self, raw: DataFrame) -> DataFrame:
-        from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
-
-        topic = "topic" if "topic" in raw.columns else None
+        # decode_envelope is looked up on its module at call time, so a
+        # wrapper installed there (perfbench's tracer) sees every decode.
         return with_change_columns(
-            decode_envelope(raw, self.row_schema, topic_col=topic), self.offset_col
+            debezium.decode_envelope(raw, self.row_schema), self.offset_col
         )
 
     def process_batch(self, raw: DataFrame) -> None:
@@ -582,10 +602,7 @@ class MultiTableCdcRouter:
     def dead_letters(self, raw: DataFrame) -> DataFrame:
         """Records that parsed to no known table (or not at all)."""
         any_schema = next(iter(self.specs.values()))[0]
-        from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
-
-        topic = "topic" if "topic" in raw.columns else None
-        decoded = decode_envelope(raw, any_schema, topic_col=topic)
+        decoded = debezium.decode_envelope(raw, any_schema)
         known = F.col("src_table").isin(*self.specs.keys())
         return decoded.where(
             F.col("_error").isNotNull() | (~F.col("_tombstone") & ~F.coalesce(known, F.lit(False)))

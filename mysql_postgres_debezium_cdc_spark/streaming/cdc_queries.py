@@ -189,12 +189,12 @@ def _events_changelog(spark: SparkSession, sf_dir: str, lo: int | None = None, h
         f"STRUCT("
         f"CASE WHEN ({op} = 'd') THEN {row_image} END AS before, "
         f"CASE WHEN (NOT ({op} = 'd')) THEN {row_image} END AS after, "
-        f"STRUCT('app' AS db, 'user_state' AS table,"
+        f"STRUCT('app' AS db, 'user_state' AS `table`,"
         f" unix_millis(ts) AS ts_ms) AS source, "
         f"{op} AS op, "
         f"unix_millis(ts) AS ts_ms)"
     )
-    return ev.selectExpr(f"TO_JSON({env}) AS value", "event_id AS offset")
+    return ev.selectExpr(f"TO_JSON({env}) AS value", "event_id AS `offset`")
 
 
 _LASTWRITE_ORACLE = """

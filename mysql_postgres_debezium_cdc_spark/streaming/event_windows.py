@@ -1,11 +1,13 @@
-"""Event-time windows: tumbling, sliding, session — batch formulations.
+"""Event-time windows, streaming joins and stateful aggregates: the
+registered batch runs of the streaming jobs.
 
-These register the *batch-equivalent* of each Structured Streaming
-window query so the DuckDB oracle can check semantics; the same
-expressions run unchanged under ``readStream`` (see streaming/jobs.py,
-tested stream-vs-batch in tests/test_streaming.py).  Window boundaries
-are emitted as epoch seconds (BIGINT) — timestamp objects don't
-hash-compare portably across engines.
+Each key that has a live twin builds its result by calling that twin's
+function in streaming/jobs.py over the batch ``load(...)`` of the
+fixture, plus an ``orderBy``; the DuckDB oracle checks the batch run,
+and tests/test_streaming.py runs the same function under ``readStream``
+and asserts equality.  Window boundaries are emitted as epoch seconds
+(BIGINT) — timestamp objects don't hash-compare portably across
+engines.
 
 Scale: event-time windowing is a single shuffle on (key, window); state
 in the streaming case is bounded by the watermark horizon.
@@ -14,14 +16,22 @@ in the streaming case is bounded by the watermark horizon.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from mysql_postgres_debezium_cdc_spark.registry import register
 from mysql_postgres_debezium_cdc_spark.sources.parquet import load
-
-
-def _win_start_s(col: str = "w.start"):
-    return F.unix_timestamp(F.col(col)).alias("window_start_s")
+from mysql_postgres_debezium_cdc_spark.streaming.jobs import (
+    attribution_join,
+    attribution_join_outer,
+    enrichment_agg,
+    run_to_memory,
+    session_agg,
+    sliding_agg,
+    stream_events,
+    tumbling_agg,
+    tumbling_cents_agg,
+    user_state_stateful,
+)
 
 
 @register(
@@ -41,15 +51,8 @@ def _win_start_s(col: str = "w.start"):
 )
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling window aggregation (F.window)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(_win_start_s(), "event_type", "n_events", "sum_value")
-        .orderBy("window_start_s", "event_type")
+    return tumbling_agg(load(spark, sf_dir, "events")).orderBy(
+        "window_start_s", "event_type"
     )
 
 
@@ -75,16 +78,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replicates Spark's window assignment closed-form: an event
     at epoch t belongs to starts {floor(t/1800)*1800 - off, off ∈ {0,1800}}.
     """
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(_win_start_s(), "n_events", "sum_value")
-        .orderBy("window_start_s")
-    )
+    return sliding_agg(load(spark, sf_dir, "events")).orderBy("window_start_s")
 
 
 @register(
@@ -121,21 +115,8 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark defines session end = last event ts + gap; the oracle's
     gaps-and-islands formulation reproduces exactly that.
     """
-    ev = load(spark, sf_dir, "events").where(F.col("user_id") < 20)
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp("w.start").alias("session_start_s"),
-            F.unix_timestamp("w.end").alias("session_end_s"),
-            "n_events",
-            "sum_value",
-        )
-        .orderBy("user_id", "session_start_s")
+    return session_agg(load(spark, sf_dir, "events")).orderBy(
+        "user_id", "session_start_s"
     )
 
 
@@ -187,7 +168,7 @@ def stream_user_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch formulation of the per-user running-state reducer — the
     oracle-checked definition whose streaming twin is
     ``jobs.user_state_stateful`` (applyInPandasWithState); equality is
-    asserted in tests/test_streaming.py."""
+    asserted in-plan by [[stream_user_running_state_stateful]]."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
@@ -221,11 +202,9 @@ def stream_user_running_state_stateful(spark: SparkSession, sf_dir: str) -> Data
     """The REAL applyInPandasWithState job, executed to a memory sink
     (availableNow), reduced to final per-user state, and equality-checked
     in-plan against the batch twin ``stream_user_running_state``."""
-    from mysql_postgres_debezium_cdc_spark.streaming import jobs
-
-    out = jobs.run_to_memory(
+    out = run_to_memory(
         spark,
-        jobs.user_state_stateful(jobs.stream_events(spark, sf_dir)),
+        user_state_stateful(stream_events(spark, sf_dir)),
         "q_user_state",
         output_mode="update",
     )
@@ -236,14 +215,8 @@ def stream_user_running_state_stateful(spark: SparkSession, sf_dir: str) -> Data
         F.round(F.max_by("sum_value", "n_events"), 2).alias("sf_sum_value"),
         F.max("last_event_id").alias("sf_last_event_id"),
     )
-    batch = (
-        load(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("b_n_events"),
-            F.round(F.sum("value"), 2).alias("b_sum_value"),
-            F.max("event_id").alias("b_last_event_id"),
-        )
+    batch = stream_user_running_state(spark, sf_dir).toDF(
+        "user_id", "b_n_events", "b_sum_value", "b_last_event_id"
     )
     joined = stateful.join(batch, "user_id", "full_outer")
     mismatch = (
@@ -289,32 +262,8 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     condition plus watermarks BOUNDS the join state — each side keeps
     only rows younger than (watermark + 30 min), so state is
     O(rate × horizon), never O(stream)."""
-    ev = load(spark, sf_dir, "events")
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("value"),
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    return (
-        p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("c_ts") <= F.col("p_ts"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE")),
-        )
-        .select(
-            "purchase_id",
-            "click_id",
-            "user_id",
-            F.round("value", 2).alias("purchase_value"),
-        )
-        .orderBy("purchase_id", "click_id")
+    return attribution_join(load(spark, sf_dir, "events")).orderBy(
+        "purchase_id", "click_id"
     )
 
 
@@ -349,20 +298,9 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     maybe_broadcast policy as the TPC-H family.  Value sums ride as
     integer cents so both engines (and the stream twin's incremental
     accumulation order) agree bit-for-bit."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("mktsegment")
-    )
-    return (
-        ev.select("user_id", "event_type", F.round(F.col("value") * 100).cast("bigint").alias("cents"))
-        .join(cust, "user_id")
-        .groupBy("mktsegment", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("cents").cast("bigint").alias("sum_cents"),
-        )
-        .orderBy("mktsegment", "event_type")
-    )
+    return enrichment_agg(
+        load(spark, sf_dir, "events"), load(spark, sf_dir, "customer")
+    ).orderBy("mktsegment", "event_type")
 
 
 @register(
@@ -397,35 +335,9 @@ def stream_stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     live twin's equality test advances the watermark with a sentinel
     event for exactly this reason; see jobs.attribution_join_outer and
     tests/test_streaming.py)."""
-    ev = load(spark, sf_dir, "events")
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("value"),
+    return attribution_join_outer(load(spark, sf_dir, "events")).orderBy(
+        "purchase_id", "click_id"
     )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    return (
-        p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("c_ts") <= F.col("p_ts"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE")),
-            "left_outer",
-        )
-        .select(
-            "purchase_id",
-            "click_id",
-            "user_id",
-            F.round("value", 2).alias("purchase_value"),
-        )
-        .orderBy("purchase_id", "click_id")
-    )
-
 
 
 @register(
@@ -467,17 +379,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-sized).  Ties break deterministically on event_type; value
     sums ride as integer cents (thousands of doubles per group — the
     cross-engine summation-order contract)."""
-    from pyspark.sql import Window
-
-    ev = load(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_cents"),
-    ).select(_win_start_s(), "event_type", "n_events", "sum_cents")
+    hourly = tumbling_cents_agg(load(spark, sf_dir, "events"))
     w = Window.partitionBy("window_start_s").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )

@@ -1,9 +1,12 @@
-"""Actual Structured Streaming jobs over the events fixture.
+"""Structured Streaming jobs over the events fixture, and the one
+definition of every windowed, joined or aggregated streaming query.
 
-``event_windows.py`` registers the batch-equivalent formulations for the
-DuckDB oracle; this module runs the SAME expressions under
-``readStream`` — tests assert stream-vs-batch equality, which is the
-streaming correctness argument (one definition, two execution modes).
+``event_windows.py`` registers each of these bodies over the batch
+``load(...)`` of the fixture (plus an ``orderBy``) for the DuckDB
+oracle; here the same function runs under ``readStream``.  On a batch
+frame the analyzer drops ``withWatermark``, so the registered plan is
+the plain aggregate.  tests/test_streaming.py asserts stream-vs-batch
+equality: one definition, two execution modes.
 
 Watermarks bound state: a ``withWatermark("ts", H)`` windowed aggregate
 keeps only windows newer than (max event time − H) in the state store —
@@ -69,7 +72,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tumbling_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """1-hour tumbling count/sum per event_type (streaming form of
+    """1-hour tumbling count/sum per event_type (the body of
     event_windows.stream_tumbling_window)."""
     return (
         events.withWatermark("ts", watermark)
@@ -88,7 +91,7 @@ def tumbling_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 
 def sliding_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """1-hour window sliding every 30 min (streaming form of
+    """1-hour window sliding every 30 min (the body of
     event_windows.stream_sliding_window): each event contributes to two
     overlapping windows; the watermark evicts windows whose end falls
     behind the event-time horizon, so state is O(active windows), with
@@ -109,7 +112,7 @@ def sliding_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 
 def session_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """30-minute-gap session windows per user (streaming form of
+    """30-minute-gap session windows per user (the body of
     event_windows.stream_session_window)."""
     return (
         events.where(F.col("user_id") < 20)
@@ -270,11 +273,15 @@ def user_state_stateful(events: DataFrame) -> DataFrame:
 
 
 def attribution_join(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked stream-stream interval join (live twin of
-    event_windows.stream_stream_join_attribution): purchases ⋈ same-user
+    """Watermarked stream-stream interval join, the body of
+    event_windows.stream_stream_join_attribution: purchases ⋈ same-user
     clicks within the previous 30 minutes.  Watermarks on BOTH sides +
     the interval condition let Spark evict join state older than the
     horizon."""
+    return _attribution(events, watermark, "inner")
+
+
+def _attribution(events: DataFrame, watermark: str, how: str) -> DataFrame:
     p = (
         events.where(F.col("event_type") == "purchase")
         .select(
@@ -299,6 +306,7 @@ def attribution_join(events: DataFrame, watermark: str = "2 hours") -> DataFrame
         (F.col("user_id") == F.col("c_user"))
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE")),
+        how,
     ).select(
         "purchase_id",
         "click_id",
@@ -308,7 +316,7 @@ def attribution_join(events: DataFrame, watermark: str = "2 hours") -> DataFrame
 
 
 def enrichment_agg(events: DataFrame, customers: DataFrame) -> DataFrame:
-    """Stream-static enrichment (live twin of
+    """Stream-static enrichment (the body of
     event_windows.stream_static_enrichment): the event stream joins the
     STATIC customer dimension, then aggregates per (segment, type).
 
@@ -317,7 +325,7 @@ def enrichment_agg(events: DataFrame, customers: DataFrame) -> DataFrame:
     updates between batches); only the aggregation keeps state,
     O(segments × types) rows.  Sums accumulate as integer cents so
     incremental micro-batch accumulation is order-independent and lands
-    bit-identical to the batch twin."""
+    bit-identical to the batch run."""
     cust = customers.select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("mktsegment")
     )
@@ -337,48 +345,18 @@ def enrichment_agg(events: DataFrame, customers: DataFrame) -> DataFrame:
 
 
 def attribution_join_outer(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """LEFT OUTER watermarked stream-stream interval join (live twin of
-    event_windows.stream_stream_join_left_outer).
+    """LEFT OUTER form of [[attribution_join]], the body of
+    event_windows.stream_stream_join_left_outer.
 
-    Semantics the batch twin cannot show: a null-padded (unattributed)
+    Semantics a batch run cannot show: a null-padded (unattributed)
     purchase is emitted only once the CLICK side's watermark passes
     `p_ts`, i.e. once no in-horizon click can still arrive.  Corollary:
     when a stream STOPS, unmatched purchases younger than the horizon
     are never emitted — correct (a matching click might still have
     come), but it means an availableNow equality test must advance the
     watermark past the fixture's tail (a sentinel event) before
-    comparing against the batch twin."""
-    p = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-            F.col("value"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    c = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    return p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTE")),
-        "leftOuter",
-    ).select(
-        "purchase_id",
-        "click_id",
-        "user_id",
-        F.round("value", 2).alias("purchase_value"),
-    )
+    comparing against the batch run."""
+    return _attribution(events, watermark, "leftOuter")
 
 
 TWS_OUTPUT = T.StructType(
@@ -468,7 +446,7 @@ def user_state_tws(spark: SparkSession, events: DataFrame) -> DataFrame:
 
 
 def tumbling_cents_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming form of the aggregate under stream_windowed_topk: the
+    """The aggregate under event_windows.stream_windowed_topk: the
     stream maintains per-(window, type) counts and integer-cent sums;
     rank-1 selection happens at read time over the materialized state."""
     return (

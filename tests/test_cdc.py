@@ -9,6 +9,7 @@ same last-write-wins oracle.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -573,7 +574,7 @@ _EDGE_CASES = [
 def _edge_frame(spark, value_col="value", topic_col="topic"):
     return spark.createDataFrame(
         [(v, "dbserver1.app.orders", i) for i, (v, _) in enumerate(_EDGE_CASES)],
-        f"`{value_col}` string, `{topic_col}` string, offset bigint",
+        f"`{value_col}` string, `{topic_col}` string, `offset` bigint",
     )
 
 
@@ -586,19 +587,39 @@ def _decoded_rows(decoded):
     ]
 
 
-@pytest.mark.parametrize(
-    "escaped_literals,value_col,topic_col",
-    [(False, "value", "topic"), (True, "kafka-value", "select")],
-)
-def test_decode_envelope_edge_matrix(spark, escaped_literals, value_col, topic_col):
-    """Every envelope shape decodes to fixed fields, also with column
-    names that are no identifiers and under escaped string literals
-    (where a '\\.' topic split would invert), and the decoded frame
-    compacts without error."""
-    conf = "spark.sql.parser.escapedStringLiterals"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, str(escaped_literals).lower())
+_ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
+_RESERVED_KEYWORDS = "spark.sql.ansi.enforceReservedKeywords"
+
+
+@contextlib.contextmanager
+def _confs(spark, confs):
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "confs,value_col,topic_col",
+    [
+        pytest.param({}, "value", "topic", id="False-value-topic"),
+        pytest.param(
+            {_ESCAPED_LITERALS: "true"}, "kafka-value", "select", id="True-kafka-value-select"
+        ),
+        pytest.param({_RESERVED_KEYWORDS: "true"}, "value", "topic", id="reserved-keywords"),
+    ],
+)
+def test_decode_envelope_edge_matrix(spark, confs, value_col, topic_col):
+    """Every envelope shape decodes to fixed fields, also with column
+    names that are no identifiers, under escaped string literals
+    (where a '\\.' topic split would invert) and with ANSI reserved
+    keywords enforced (where a bare `table` field fails to parse), and
+    the decoded frame compacts without error."""
+    with _confs(spark, confs):
         decoded = decode_envelope(
             _edge_frame(spark, value_col, topic_col),
             _EDGE_ROW,
@@ -610,8 +631,19 @@ def test_decode_envelope_edge_matrix(spark, escaped_literals, value_col, topic_c
         assert sorted(map(tuple, kept.collect()), key=str) == [
             (1, 0), (2, 1), (3, 2), (4, 3), (5, 4), (6, 5), (None, 13),
         ]
-    finally:
-        spark.conf.set(conf, old)
+
+
+def test_lastwrite_materialize_under_reserved_keywords(spark):
+    """The registered replica key parses end to end with ANSI reserved
+    keywords enforced and returns the default-conf rows."""
+    from mysql_postgres_debezium_cdc_spark.registry import all_queries
+    from tests.conftest import SF_DIR_SMOKE
+
+    q = all_queries()["cdc_lastwrite_materialize"]
+    want = q.fn(spark, SF_DIR_SMOKE).collect()
+    with _confs(spark, {_RESERVED_KEYWORDS: "true"}):
+        got = q.fn(spark, SF_DIR_SMOKE).collect()
+    assert want and got == want
 
 
 def test_decode_plan_parses_json_once(spark):

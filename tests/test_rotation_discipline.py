@@ -139,3 +139,16 @@ def test_closure_hash_tracks_helpers_and_constants():
     # registry on any loader edit — that breadth is what vintage aging
     # covers (scripts/drift_audit.py _INFRA_NAMES).
     assert "def load" not in blocks["ann_lsh_topk"]
+
+    # Stream/batch twins: a registered key that calls its live job's
+    # function (imported by name, which the closure walk follows) carries
+    # that function's body, so editing the shared job drifts the key; the
+    # SRM trio carries its one shared arm-count builder.
+    assert "def tumbling_agg" in blocks["stream_tumbling_window"]
+    assert "def _srm_arms" in blocks["stream_srm_monitor"]
+
+    # A same-module call to a registered function carries that function,
+    # not the registry: re-splicing _PRIORITY drifts no key.
+    overlap = blocks["join_interval_overlap"]
+    assert "def events_sessionize_gap" in overlap
+    assert "_PRIORITY" not in overlap

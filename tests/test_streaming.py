@@ -1,8 +1,10 @@
 """Stream-vs-batch equivalence + watermark semantics.
 
-The registered batch queries are the oracle-checked definitions; these
-tests prove the same expressions produce identical results under real
-Structured Streaming execution (micro-batch, stateful aggregation)."""
+Each registered streaming key is the batch run of a function in
+streaming/jobs.py, checked against its DuckDB oracle; these tests run
+the same function under real Structured Streaming execution
+(micro-batch, stateful aggregation) and assert identical results: two
+execution modes of one definition."""
 
 from __future__ import annotations
 
