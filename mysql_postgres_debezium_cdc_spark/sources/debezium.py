@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 DEFAULT_PK = ("id",)  # reference default, Consumer.java:171
@@ -35,12 +35,33 @@ def quote_ident(name: str) -> str:
     under any parser conf."""
     return "`" + name.replace("`", "``") + "`"
 
+
+def _reject_reserved(columns: list[str], reserved, stage: str) -> None:
+    """Raise ``ValueError`` when an input frame's ``columns`` hold one
+    that ``stage`` adds (compared case-insensitively, as Spark resolves
+    names by default): Spark would keep both, and the first reference
+    to the name would fail as ambiguous far from its cause."""
+    names = {n.lower() for n in reserved}
+    for c in columns:
+        if c.lower() in names:
+            raise ValueError(
+                f"{stage}: input column {c!r} clashes with a column {stage} adds;"
+                " rename or drop it first"
+            )
+
+
 SOURCE_SCHEMA = T.StructType(
     [
         T.StructField("db", T.StringType()),
         T.StructField("table", T.StringType()),
         T.StructField("ts_ms", T.LongType()),
     ]
+)
+
+
+# The columns decode_envelope adds, plus its working column.
+_DECODED_COLS = (
+    "op", "before", "after", "src_db", "src_table", "ts_ms", "_tombstone", "_error", "_env",
 )
 
 
@@ -76,22 +97,26 @@ def decode_envelope(
     Output adds: op, before, after, src_db, src_table, ts_ms, _error
     (non-null for malformed/unparseable records — the per-record error
     isolation of Consumer.java:186-188 as a dead-letter column instead
-    of a log line).
+    of a log line).  An input column of one of these names (or ``_env``)
+    raises ``ValueError``.
     """
     # One parse per row against one schema: the root envelope fields
     # plus ``payload`` holding the same fields (a JsonConverter
     # schemas-enabled record).  Each output field comes from ``payload``
     # when it parsed to a struct, else from the root, so a bare envelope,
     # ``"payload": null`` and ``"payload": "str"`` all read the root.
-    # The decode tree ships as one SQL string (one py4j round trip, not
-    # one per operator).  The schema rides in its JSON form, and field
-    # paths are backtick-quoted: the DDL form and bare paths fail to
-    # parse on a field such as `table` under
-    # spark.sql.ansi.enforceReservedKeywords=true.
+    # The field extraction ships as one SQL string (one py4j round trip,
+    # not one per operator), with backtick-quoted field paths: bare
+    # paths fail to parse on a field such as `table` under
+    # spark.sql.ansi.enforceReservedKeywords=true.  The schema goes
+    # through the Column API, never into a SQL literal, so no field name
+    # (`it's`) or parser conf can break it.
     # Rows equal the two-parse form it replaced (3be9efc); re-prove with
     # `scripts/ab.py 3be9efc cdc_lastwrite_materialize cdc_offset_range_diff`.
+    columns = df.columns
+    _reject_reserved(columns, _DECODED_COLS, "decode_envelope")
     env = envelope_schema(row_schema)
-    sch = T.StructType([*env.fields, T.StructField("payload", env)]).json()
+    sch = T.StructType([*env.fields, T.StructField("payload", env)])
     value = quote_ident(value_col)
 
     def field(path: str) -> str:
@@ -102,7 +127,7 @@ def decode_envelope(
     # literal (a '\\.' regex inverts under escapedStringLiterals).
     topic_table = (
         f"substring_index({quote_ident(topic_col)}, '.', -1)"
-        if topic_col and topic_col in df.columns
+        if topic_col and topic_col in columns
         else "CAST(NULL AS STRING)"
     )
     # The parse is the output of a one-row generator, not a projected
@@ -111,8 +136,8 @@ def decode_envelope(
     # reference, each pruned to its own schema so none is shared (13
     # parses a row in cdc_lastwrite_materialize).  No predicate on a
     # generator's output is pushed below it, so each record parses once.
-    parsed = f"explode(array(from_json({value}, '{sch}'))) AS _env"
-    out = df.selectExpr("*", parsed).selectExpr(
+    parsed = F.explode(F.array(F.from_json(F.col(value), sch))).alias("_env")
+    out = df.select("*", parsed).selectExpr(
         "*",
         f"{field('op')} AS op",
         f"{field('before')} AS before",
@@ -197,16 +222,6 @@ def encode_envelope(
         F.to_json(body, opts).alias("value"),
         F.lit(f"{topic_prefix}.{db}.{table}").alias("topic"),
     )
-
-
-def kafka_sink_options(bootstrap: str, checkpoint_dir: str) -> dict[str, str]:
-    """writeStream.format('kafka') options for the egress path; the
-    frame supplies per-row ``topic``/``key``/``value`` columns (the
-    Kafka sink's column contract), so no static topic option is set."""
-    return {
-        "kafka.bootstrap.servers": bootstrap,
-        "checkpointLocation": checkpoint_dir,
-    }
 
 
 @dataclass(frozen=True)
@@ -324,8 +339,3 @@ def kafka_cdc_source(
         .options(**kafka_reader_options(bootstrap_servers, subscribe_pattern, starting_offsets))
         .load()
     )
-
-
-def epoch_millis_to_ts(col: Column) -> Column:
-    """Debezium connect-mode temporal decode (SURVEY §1.3)."""
-    return F.timestamp_millis(col)

@@ -42,9 +42,10 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from mysql_postgres_debezium_cdc_spark.sources import debezium
-from mysql_postgres_debezium_cdc_spark.sources.debezium import quote_ident
+from mysql_postgres_debezium_cdc_spark.sources.debezium import _reject_reserved, quote_ident
 
 IS_DELETE = "_is_delete"
 ORDER_COL = "_cdc_offset"
@@ -66,7 +67,9 @@ def with_change_columns(
     """Normalize a decoded envelope frame: add _is_delete and _cdc_offset.
 
     op dispatch mirrors Consumer.java:174-185: c/r/u → upsert,
-    d → delete, anything else is dropped to the dead-letter filter."""
+    d → delete, anything else is dropped to the dead-letter filter.
+    An input that already has either column raises ``ValueError``."""
+    _reject_reserved(decoded.columns, (IS_DELETE, ORDER_COL), "with_change_columns")
     # r13 (guide §5): SQL strings, same trees: at a checkout of 65b16c2,
     # `scripts/ab.py 65b16c2^ cdc_lastwrite_materialize cdc_offset_range_diff`
     # shows the analyzed plans equal modulo expression ids.
@@ -116,14 +119,17 @@ def compact(batch: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
     (map-side) SortAggregate still runs before the shuffle, so the
     exchange carries ≤ one event per (key, map partition) — the
     frontier, not the firehose — which is the property that matters at
-    100 TB."""
+    100 TB.
+
+    An input that already has a ``_pk_<c>`` column raises ``ValueError``."""
     q = quote_ident
     pk_aliases = [_pk_alias(c) for c in pk_cols]
+    others = batch.columns
+    _reject_reserved(others, pk_aliases, "compact")
     keyed = batch.selectExpr(
         "*",
         *[f"COALESCE(after.{q(c)}, before.{q(c)}) AS {q(_pk_alias(c))}" for c in pk_cols],
     )
-    others = [c for c in keyed.columns if c not in pk_aliases]
     return (
         keyed.groupBy(*map(q, pk_aliases))
         .agg(
@@ -564,12 +570,21 @@ class MultiTableCdcRouter:
     tables fall through to the dead-letter side rather than failing the
     batch (Consumer.java:186-188 posture).
 
-    Physical shape per micro-batch: the mixed batch is persisted once,
-    then each table's slice decodes it with that table's schema, filters
-    on ``src_table`` and runs the standard compact→merge — the JSON
-    envelope is parsed once per table (N parses on N tables), not once
-    per batch.  Per-table slices are independent — on a cluster they run
-    as parallel jobs off the one cached batch.
+    Physical shape per micro-batch: the batch is decoded once, with
+    ``before``/``after`` kept as JSON text (a ``StringType`` row schema),
+    and only what compact→merge reads is persisted: the two row images,
+    ``src_table``, the delete flag and the offset.  Each table's slice
+    filters that cached frame on ``src_table`` first, types its own rows
+    with ``from_json(before/after, row_schema)`` and runs the standard
+    compact→merge, so every record's envelope is parsed once per batch
+    and its row image once more, by its own table only.  Dead letters
+    come from the same ``StringType`` decode, so an unknown table's row
+    keeps its full image.  The text is Spark's re-serialization of the
+    parsed JSON: integers, doubles and strings type as in a one-stage
+    decode, but a ``DecimalType`` field is rounded to a double's digits
+    (the wire sends decimals as doubles, decimal.handling.mode=double).
+    Per-table slices are independent: on a cluster they run as parallel
+    jobs off the one cached decode.
     """
 
     def __init__(self, spark, config, table_specs, state_root: str):
@@ -591,18 +606,29 @@ class MultiTableCdcRouter:
             )
 
     def process_batch(self, raw: DataFrame) -> None:
-        raw = raw.persist()  # one materialization feeds every table slice
+        # decode_envelope is looked up on its module at call time, so a
+        # wrapper installed there (perfbench's tracer) sees the decode.
+        events = (
+            with_change_columns(debezium.decode_envelope(raw, T.StringType()))
+            .select("before", "after", "src_table", IS_DELETE, ORDER_COL)
+            .persist()  # one decode feeds every table slice
+        )
         try:
             for src_table, pipe in self.pipelines.items():
-                events = pipe.decode(raw).where(F.col("src_table") == src_table)
-                pipe.sink.merge(compact(events, pipe.pk_cols))
+                rows = events.where(F.col("src_table") == src_table).select(
+                    F.from_json("before", pipe.row_schema).alias("before"),
+                    F.from_json("after", pipe.row_schema).alias("after"),
+                    IS_DELETE,
+                    ORDER_COL,
+                )
+                pipe.sink.merge(compact(rows, pipe.pk_cols))
         finally:
-            raw.unpersist()
+            events.unpersist()
 
     def dead_letters(self, raw: DataFrame) -> DataFrame:
-        """Records that parsed to no known table (or not at all)."""
-        any_schema = next(iter(self.specs.values()))[0]
-        decoded = debezium.decode_envelope(raw, any_schema)
+        """Records that parsed to no known table (or not at all), with
+        their row images as JSON text."""
+        decoded = debezium.decode_envelope(raw, T.StringType())
         known = F.col("src_table").isin(*self.specs.keys())
         return decoded.where(
             F.col("_error").isNotNull() | (~F.col("_tombstone") & ~F.coalesce(known, F.lit(False)))

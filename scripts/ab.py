@@ -36,7 +36,8 @@ import tempfile
 import time
 import traceback
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from gitrev import REPO, export_rev
+
 SCALES = ("sf0.001", "sf0.01", "sf0.1")
 PLAN_SCALE = "sf0.01"
 TIME_SCALE = "sf0.1"
@@ -197,10 +198,7 @@ def main(argv: list[str]) -> int:
     testdata = os.path.dirname(SF_DIR_SMOKE)
     rev, keys = argv[0], argv[1:]
     with tempfile.TemporaryDirectory(prefix="ab-base-") as base_root:
-        archive = subprocess.run(
-            ["git", "archive", "--format=tar", rev], cwd=REPO, capture_output=True, check=True
-        )
-        subprocess.run(["tar", "-x", "-C", base_root], input=archive.stdout, check=True)
+        export_rev(rev, base_root)
         env = worker_env()
         print(
             f"base {rev} vs work tree {REPO} "

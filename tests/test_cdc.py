@@ -655,3 +655,159 @@ def test_decode_plan_parses_json_once(spark):
     for frame in (decoded, filtered):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("from_json(") == 1, plan
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_decode_row_field_with_quote(spark, escaped):
+    """A row-schema field name holding a quote decodes under either
+    string-literal mode: the schema never rides in a SQL literal."""
+    row = T.StructType([T.StructField("id", T.LongType()), T.StructField("it's", T.StringType())])
+    raw = spark.createDataFrame(
+        [('{"op": "c", "after": {"id": 1, "it\'s": "q"}}', 0)], "value string, offset long"
+    )
+    with _confs(spark, {_ESCAPED_LITERALS: escaped}):
+        got = decode_envelope(raw, row).select("op", "after", "_error").collect()
+    assert [tuple(r) for r in got] == [("c", (1, "q"), None)]
+
+
+@pytest.mark.parametrize(
+    "stage,column",
+    [
+        *[
+            ("decode", c)
+            for c in (
+                "op", "before", "after", "src_db", "src_table", "ts_ms", "_tombstone",
+                "_error", "_env", "SRC_TABLE",
+            )
+        ],
+        ("change_columns", "_is_delete"),
+        ("change_columns", "_cdc_offset"),
+        ("compact", "_pk_id"),
+    ],
+)
+def test_reserved_input_columns_are_rejected(spark, stage, column):
+    """An input column that a stage adds is a clear ValueError naming it,
+    not duplicate columns and an ambiguous reference downstream."""
+    raw = _edge_frame(spark)
+    stages = {
+        "decode": lambda df: decode_envelope(df, _EDGE_ROW),
+        "change_columns": lambda df: with_change_columns(df),
+        "compact": lambda df: compact(df, ["id"]),
+    }
+    upstream = {
+        "decode": raw,
+        "change_columns": decode_envelope(raw, _EDGE_ROW),
+        "compact": with_change_columns(decode_envelope(raw, _EDGE_ROW)),
+    }[stage]
+    with pytest.raises(ValueError, match=f"'{column}'"):
+        stages[stage](upstream.withColumn(column, F.lit(1)))
+
+
+# A two-table batch for the router's decode tests: customers, orders
+# (payload-wrapped and bare), a tombstone, a poison record and an
+# unknown table whose row image has fields no configured table knows.
+_ORDERS_ROW = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("purchaser", T.LongType()),
+        T.StructField("product", T.StringType()),
+    ]
+)
+
+
+def _router(spark, root):
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import MultiTableCdcRouter
+
+    return MultiTableCdcRouter(
+        spark,
+        CdcConfig.from_properties("pk.customers=id\npk.orders=id\n"),
+        {
+            "customers": (ROW_SCHEMA, ["name", "created_ms"]),
+            "orders": (_ORDERS_ROW, ["purchaser", "product"]),
+        },
+        str(root),
+    )
+
+
+def _router_raw(spark):
+    def mk(table, op, after=None, before=None, wrap=False):
+        e = {"before": before, "after": after, "source": {"db": "app", "table": table},
+             "op": op, "ts_ms": 1}
+        return json.dumps({"payload": e} if wrap else e), f"dbserver1.app.{table}"
+
+    records = [
+        mk("customers", "c", {"id": 1, "name": "ann", "created_ms": 5}),
+        mk("orders", "c", {"id": 10, "purchaser": 1, "product": "bolt"}, wrap=True),
+        mk("orders", "d", before={"id": 10, "purchaser": 1, "product": "bolt"}),
+        mk("orders", "c", {"id": 11, "purchaser": 1, "product": "gear"}),
+        mk("audit_log", "c", {"id": 99, "note": "x", "tags": [1, 2]}),
+        (None, "dbserver1.app.orders"),
+        ('{"op": "c", "after": {', "dbserver1.app.customers"),
+    ]
+    return spark.createDataFrame(
+        [(v, t, o) for o, (v, t) in enumerate(records)], "value string, topic string, offset long"
+    )
+
+
+def test_router_decodes_each_batch_once(spark, tmp_path, monkeypatch):
+    """One envelope decode per batch, and every table slice reads the
+    cached decode: no slice parses the raw `value` again."""
+    from mysql_postgres_debezium_cdc_spark.sources import debezium
+
+    calls = []
+    decode = debezium.decode_envelope
+
+    def counted(*args, **kwargs):
+        calls.append(args[1])
+        return decode(*args, **kwargs)
+
+    monkeypatch.setattr(debezium, "decode_envelope", counted)
+    router = _router(spark, tmp_path / "state")
+    plans = {}
+    for table, pipe in router.pipelines.items():
+        def merge(compacted, table=table, merge=pipe.sink.merge):
+            plans[table] = compacted._jdf.queryExecution().optimizedPlan().toString()
+            merge(compacted)
+
+        monkeypatch.setattr(pipe.sink, "merge", merge)
+    router.process_batch(_router_raw(spark))
+    assert len(calls) == 1
+    assert sorted(plans) == ["customers", "orders"]
+    for table, plan in plans.items():
+        # The relation's own string holds the cached plan (and its parse),
+        # so only the operators above the relation are checked.
+        above, cached, _ = plan.partition("InMemoryRelation")
+        assert cached, plan
+        assert not [ln for ln in above.splitlines() if "from_json(" in ln and "value#" in ln], plan
+    assert {r["id"]: r["name"] for r in router.read_state("customers").collect()} == {1: "ann"}
+    assert {r["id"]: r["product"] for r in router.read_state("orders").collect()} == {11: "gear"}
+
+
+def test_router_leaves_nothing_cached(spark, tmp_path, monkeypatch):
+    """The batch's cached decode is released after every batch, also when
+    a slice's merge fails, and the failure still propagates."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    router = _router(spark, tmp_path / "state")
+    raw = _router_raw(spark)
+    router.process_batch(raw)
+    assert cache.isEmpty()
+
+    def broken(compacted):
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(router.pipelines["orders"].sink, "merge", broken)
+    with pytest.raises(RuntimeError, match="sink down"):
+        router.process_batch(raw)
+    assert cache.isEmpty()
+
+
+def test_router_dead_letters_keep_row_image(spark, tmp_path):
+    """An unknown table's dead letter carries its whole row image, not
+    one coerced to some configured table's schema."""
+    router = _router(spark, tmp_path / "state")
+    dl = {r["offset"]: r for r in router.dead_letters(_router_raw(spark)).collect()}
+    assert sorted(dl) == [4, 6]
+    assert dl[4]["src_table"] == "audit_log" and dl[4]["_error"] is None
+    assert json.loads(dl[4]["after"]) == {"id": 99, "note": "x", "tags": [1, 2]}
+    assert dl[6]["_error"].startswith("unparseable envelope")
