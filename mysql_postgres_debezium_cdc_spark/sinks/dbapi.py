@@ -24,7 +24,8 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
+
+from mysql_postgres_debezium_cdc_spark.streaming.cdc import state_rows
 
 
 #: DBAPI paramstyle → placeholder text.  sqlite3 is ``qmark``;
@@ -124,24 +125,16 @@ class DbapiKeyedSink:
         self.upsert_sql = build_upsert_sql(table, self.insert_cols, pk_cols, paramstyle)
         self.delete_sql = build_delete_sql(table, pk_cols, paramstyle)
 
-    def apply(self, compacted: DataFrame, is_delete_col: str = "_is_delete") -> None:
-        """Write one compacted micro-batch in ``streaming.cdc.compact``
-        output shape (``_pk_<c>`` key columns, ``after`` row struct,
-        ``_is_delete`` flag).  Compaction (latest event per PK) must have
-        happened upstream, so upsert/delete ordering within the batch is
-        immaterial."""
+    def apply(self, compacted: DataFrame) -> None:
+        """Write one compacted micro-batch (``streaming.cdc.compact`` or
+        ``change_rows`` output).  Compaction (latest event per PK) must
+        have happened upstream, so upsert/delete ordering within the
+        batch is immaterial."""
         factory = self.connection_factory
         upsert_sql, delete_sql = self.upsert_sql, self.delete_sql
-        row_cols, pk_cols, bs = self.row_cols, self.pk_cols, self.batch_size
+        n_pk, n_cols, bs = len(self.pk_cols), len(self.insert_cols), self.batch_size
 
-        df = compacted.select(
-            F.col(is_delete_col).alias("_del"),
-            F.struct(
-                *[F.col(f"_pk_{c}").alias(c) for c in pk_cols],
-                *[F.col(f"after.{c}").alias(c) for c in row_cols],
-            ).alias("_row"),
-            F.struct(*[F.col(f"_pk_{c}").alias(c) for c in pk_cols]).alias("_pk"),
-        )
+        df = state_rows(compacted, self.pk_cols, self.row_cols)
         if self.n_partitions:
             df = df.repartition(self.n_partitions)
 
@@ -160,11 +153,12 @@ class DbapiKeyedSink:
                         cur.executemany(delete_sql, dels)
                         dels.clear()
 
+                # state_rows order: pk_cols, row_cols, offset, delete flag.
                 for r in rows:
-                    if r["_del"]:
-                        dels.append(tuple(r["_pk"][c] for c in pk_cols))
+                    if r[-1]:
+                        dels.append(tuple(r[:n_pk]))
                     else:
-                        ups.append(tuple(r["_row"][c] for c in pk_cols + row_cols))
+                        ups.append(tuple(r[:n_cols]))
                     if len(ups) + len(dels) >= bs:
                         flush()
                 flush()

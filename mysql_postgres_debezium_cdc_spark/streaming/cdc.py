@@ -6,11 +6,13 @@ absence, if deleted), in source order.*  The reference gets per-key
 ordering implicitly from a single thread (Consumer.java:122-127); Spark
 shuffles destroy arrival order, so ordering is made EXPLICIT here:
 
-1. ``compact``: one surviving event per key per micro-batch —
-   ``max_by(struct(all), offset)``.  Partial aggregation means the
-   shuffle carries at most one event per (key, map-partition): at 100 TB
-   of backlog this is the difference between shuffling the firehose and
-   shuffling the frontier.
+1. ``compact``: one surviving change per key per micro-batch —
+   ``max_by(struct(_is_delete, after, _cdc_offset), _cdc_offset)``, the
+   same compacted-change format ``change_rows`` builds and
+   ``state_rows`` reads.  Partial aggregation means the shuffle carries
+   at most one change row per (key, map-partition): at 100 TB of backlog
+   this is the difference between shuffling the firehose and shuffling
+   the frontier.
 2. ``apply_changes``: state ⟕ batch full-outer on the PK; batch wins;
    delete drops the key.  Equivalent to Delta's
    ``MERGE … WHEN MATCHED AND is_delete THEN DELETE / UPDATE SET * /
@@ -104,40 +106,57 @@ def change_rows(
 
 
 def compact(batch: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
-    """Latest event per key, by offset order (SURVEY §2.1 composite
-    semantics).  Key columns come from `after` for upserts and `before`
-    for deletes (Consumer.java:197-253).
+    """Latest change per key, by offset order (SURVEY §2.1 composite
+    semantics), in ``change_rows``' columns: ``_pk_<c>…, _is_delete,
+    after, _cdc_offset``.  Key columns come from ``after`` for upserts
+    and ``before`` for deletes (Consumer.java:197-253); nothing else of
+    the input is read, so Catalyst prunes a decoded frame to
+    ``before``, ``after``, ``_is_delete`` and ``_cdc_offset``.
 
-    Physical note: ``max_by(struct(...), offset)`` carries a struct
-    aggregation buffer, which Tungsten cannot hash-aggregate in place —
-    the plan is SortAggregate (shuffle by key, per-partition sort,
-    streaming agg).  Considered and rejected: (a) per-column scalar
-    ``max_by`` would hash-aggregate but loses row atomicity when two
-    Kafka partitions carry the same offset for one key; (b) a two-phase
-    max(offset)-then-self-join re-shuffles the whole batch a second
-    time, which costs more than the per-partition sort.  The partial
-    (map-side) SortAggregate still runs before the shuffle, so the
-    exchange carries ≤ one event per (key, map partition) — the
-    frontier, not the firehose — which is the property that matters at
-    100 TB.
+    Physical note: ``max_by(struct(_is_delete, after, _cdc_offset),
+    _cdc_offset)`` carries a struct aggregation buffer, which Tungsten
+    cannot hash-aggregate in place — the plan is SortAggregate (shuffle
+    by key, per-partition sort, streaming agg).  Considered and
+    rejected: (a) per-column scalar ``max_by`` would hash-aggregate but
+    loses row atomicity when two Kafka partitions carry the same offset
+    for one key; (b) a two-phase max(offset)-then-self-join re-shuffles
+    the whole batch a second time, which costs more than the
+    per-partition sort.  The partial (map-side) SortAggregate still runs
+    before the shuffle, so the exchange carries ≤ one change row per
+    (key, map partition) — the frontier, not the firehose — which is the
+    property that matters at 100 TB.
 
     An input that already has a ``_pk_<c>`` column raises ``ValueError``."""
     q = quote_ident
     pk_aliases = [_pk_alias(c) for c in pk_cols]
-    others = batch.columns
-    _reject_reserved(others, pk_aliases, "compact")
-    keyed = batch.selectExpr(
-        "*",
-        *[f"COALESCE(after.{q(c)}, before.{q(c)}) AS {q(_pk_alias(c))}" for c in pk_cols],
-    )
+    _reject_reserved(batch.columns, pk_aliases, "compact")
+    keys = [q(a) for a in pk_aliases]
+    change = [q(IS_DELETE), "after", q(ORDER_COL)]
     return (
-        keyed.groupBy(*map(q, pk_aliases))
-        .agg(
-            F.expr(
-                f"MAX_BY(STRUCT({', '.join(map(q, others))}), {q(ORDER_COL)}) AS _latest"
-            )
+        batch.selectExpr(
+            *[f"COALESCE(after.{q(c)}, before.{q(c)}) AS {k}" for c, k in zip(pk_cols, keys)],
+            *change,
         )
-        .selectExpr(*map(q, pk_aliases), "_latest.*")
+        .groupBy(*keys)
+        .agg(F.expr(f"MAX_BY(STRUCT({', '.join(change)}), {q(ORDER_COL)}) AS _latest"))
+        .selectExpr(*keys, "_latest.*")
+    )
+
+
+def state_rows(
+    changes: DataFrame, pk_cols: Sequence[str], row_cols: Sequence[str]
+) -> DataFrame:
+    """Compacted changes (``compact`` or ``change_rows`` output) read as
+    state rows: ``pk_cols``, ``row_cols`` from ``after`` (null for a
+    delete), ``_cdc_offset`` and ``_is_delete``.  The one reader of the
+    compacted-change format: ``apply_changes`` and every sink go
+    through it."""
+    q = quote_ident
+    return changes.selectExpr(
+        *[f"{q(_pk_alias(c))} AS {q(c)}" for c in pk_cols],
+        *[f"after.{q(c)} AS {q(c)}" for c in row_cols],
+        q(ORDER_COL),
+        q(IS_DELETE),
     )
 
 
@@ -152,18 +171,14 @@ def apply_changes(
     Returns the new state with schema (pk_cols ∪ row_cols ∪ _cdc_offset).
     Semantics = Delta MERGE (matched+delete → drop, matched → replace,
     not-matched-and-not-delete → insert)."""
-    q = quote_ident
-    upserts = compacted.where(f"(NOT {q(IS_DELETE)})").selectExpr(
-        *[f"{q(_pk_alias(c))} AS {q(c)}" for c in pk_cols],
-        *[f"after.{q(c)} AS {q(c)}" for c in row_cols],
-        q(ORDER_COL),
-    )
+    rows = state_rows(compacted, pk_cols, row_cols)
+    upserts = rows.where(f"(NOT {quote_ident(IS_DELETE)})").drop(IS_DELETE)
     if state is None:
         return upserts
     # Keys touched by this batch (upsert OR delete) are removed from the
     # old state; the batch's upserts then re-add the surviving versions.
     # A deleted key is simply absent from both sides of the union.
-    touched = compacted.selectExpr(*[f"{q(_pk_alias(c))} AS {q(c)}" for c in pk_cols])
+    touched = rows.selectExpr(*map(quote_ident, pk_cols))
     untouched = state.join(touched, on=list(pk_cols), how="left_anti")
     return untouched.unionByName(upserts)
 
@@ -408,11 +423,6 @@ class DeltaStateSink:
       (Delta owns vacuuming; the ``retain`` knob here is accepted for
       protocol compatibility but not enforced row-for-row).
 
-    ``monotonic_offsets=True`` adds the at-least-once hardening the
-    parquet sink gets from idempotent replay: matched rows only
-    update/delete when ``source._cdc_offset >= target._cdc_offset``, so
-    a redelivered (older) batch cannot regress state.
-
     Import-guarded: constructing without delta-spark on the classpath
     raises ImportError with the install hint; everything upstream
     (compact, apply_changes, CdcPipeline wiring) is sink-agnostic.
@@ -427,7 +437,6 @@ class DeltaStateSink:
         pk_cols: Sequence[str],
         row_cols: Sequence[str],
         retain: int = 2,
-        monotonic_offsets: bool = False,
     ):
         from delta.tables import DeltaTable  # raises ImportError without delta-spark
 
@@ -437,45 +446,26 @@ class DeltaStateSink:
         self.pk_cols = list(pk_cols)
         self.row_cols = list(row_cols)
         self.retain = max(1, retain)
-        self.monotonic_offsets = monotonic_offsets
 
     # -- protocol -----------------------------------------------------
     def _exists(self) -> bool:
         return self._DeltaTable.isDeltaTable(self.spark, self.root)
 
-    def _source(self, compacted: DataFrame) -> DataFrame:
-        """Project a compacted batch to MERGE-source shape: PKs from the
-        ``_pk_*`` aliases, row columns from ``after`` (null for deletes,
-        unused by the delete branch), plus order + delete flag."""
-        return compacted.select(
-            *[F.col(f"_pk_{c}").alias(c) for c in self.pk_cols],
-            *[F.col(f"after.{c}").alias(c) for c in self.row_cols],
-            F.col(ORDER_COL),
-            F.col(IS_DELETE),
-        )
-
     def merge(self, compacted: DataFrame) -> None:
-        src = self._source(compacted)
-        state_cols = [*self.pk_cols, *self.row_cols, ORDER_COL]
         if not self._exists():
-            (
-                src.where(~F.col(IS_DELETE))
-                .select(*state_cols)
-                .write.format("delta")
-                .mode("overwrite")
-                .save(self.root)
-            )
+            state = apply_changes(None, compacted, self.pk_cols, self.row_cols)
+            state.write.format("delta").mode("overwrite").save(self.root)
             return
+        src = state_rows(compacted, self.pk_cols, self.row_cols)
         tgt = self._DeltaTable.forPath(self.spark, self.root)
         on = " AND ".join(f"t.{c} <=> s.{c}" for c in self.pk_cols)
-        guard = f" AND s.{ORDER_COL} >= t.{ORDER_COL}" if self.monotonic_offsets else ""
         sets = {c: f"s.{c}" for c in [*self.row_cols, ORDER_COL]}
-        inserts = {c: f"s.{c}" for c in state_cols}
+        inserts = {c: f"s.{c}" for c in self.pk_cols} | sets
         (
             tgt.alias("t")
             .merge(src.alias("s"), on)
-            .whenMatchedDelete(condition=f"s.{IS_DELETE}{guard}")
-            .whenMatchedUpdate(condition=f"NOT s.{IS_DELETE}{guard}", set=sets)
+            .whenMatchedDelete(condition=f"s.{IS_DELETE}")
+            .whenMatchedUpdate(condition=f"NOT s.{IS_DELETE}", set=sets)
             .whenNotMatchedInsert(condition=f"NOT s.{IS_DELETE}", values=inserts)
             .execute()
         )
@@ -583,8 +573,8 @@ class MultiTableCdcRouter:
     parsed JSON: integers, doubles and strings type as in a one-stage
     decode, but a ``DecimalType`` field is rounded to a double's digits
     (the wire sends decimals as doubles, decimal.handling.mode=double).
-    Per-table slices are independent: on a cluster they run as parallel
-    jobs off the one cached decode.
+    The slices run one after another off the one cached decode; they
+    share no state (each has its own sink root and ``_LOG``).
     """
 
     def __init__(self, spark, config, table_specs, state_root: str):

@@ -24,6 +24,7 @@ from mysql_postgres_debezium_cdc_spark.streaming.cdc import (
     ORDER_COL,
     apply_changes,
     compact,
+    state_rows,
     with_change_columns,
 )
 
@@ -471,11 +472,8 @@ def cdc_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         # exactly what a streaming runtime's per-epoch batch DataFrame
         # is.  (r5 timing sweep: 19 s -> ~10 s for the 3-epoch loop.)
         compacted = compact(events, ["id"]).localCheckpoint(eager=True)
-        batch = compacted.select(
-            F.col("_pk_id").alias("id"),
-            F.col("after.v").alias("new_v"),
-            F.col(IS_DELETE).alias("is_del"),
-            F.col(ORDER_COL),
+        batch = state_rows(compacted, ["id"], ["v"]).withColumnsRenamed(
+            {"v": "new_v", IS_DELETE: "is_del"}
         )
         # Presence must be an EXPLICIT flag: testing old_v IS NOT NULL
         # conflates "key absent" with "key present holding a NULL value"

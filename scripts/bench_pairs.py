@@ -11,12 +11,13 @@ side that runs first alternates from pair to pair, so a slow spell on
 the host lands on both sides alike.
 
 For every end-to-end metric that ``BENCHMARK.json`` declares, it prints
-each side's median and quartiles, the median ratio work/base, and how
-many pairs each side won (by the metric's ``better`` direction).  It
-does the same for two ungated per-run timings the run reports on stderr
-(``commit_p50_s``, ``catchup_events_per_s``), and prints each side's
-correct runs and failed operations.  Exit status 1 when a run fails or
-is not correct."""
+each side's median and quartiles, the median ratio work/base, how many
+pairs each side won (by the metric's ``better`` direction), and a
+verdict against the metric's ``bound`` (see ``verdict``).  It prints the
+same numbers, without a verdict, for two ungated per-run timings the run
+reports on stderr (``commit_p50_s``, ``catchup_events_per_s``), and each
+side's correct runs and failed operations.  Exit status 1 when a run
+fails or is not correct, or when a metric is worse beyond its bound."""
 
 from __future__ import annotations
 
@@ -69,16 +70,40 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def report(name: str, unit: str, better: str, pairs: list[dict], note: str = "") -> None:
+def verdict(base: list[float], work: list[float], better: str, bound: float) -> str:
+    """One end-to-end metric's verdict over paired runs.
+
+    ``worse beyond bound``: the work median is worse than the base median
+    by more than ``bound`` (a fraction of the base median).
+    ``unresolved``: otherwise, when the base runs spread wider than the
+    bound (interquartile range over median) and not every work run beats
+    every base run.  ``within bound``: otherwise."""
+    sign = 1 if better == "lower" else -1
+    q1, med, q3 = quartiles(base)
+    if sign * (statistics.median(work) - med) > bound * abs(med):
+        return "worse beyond bound"
+    if q3 - q1 > bound * abs(med) and not all(
+        sign * (w - b) < 0 for w in work for b in base
+    ):
+        return "unresolved"
+    return "within bound"
+
+
+def report(
+    name: str, unit: str, better: str, pairs: list[dict], bound: float | None = None
+) -> str | None:
+    """Print one metric's paired summary; return its verdict when a
+    ``bound`` is given (``None`` without one or without paired values)."""
     both = [p for p in pairs if name in p["base"] and name in p["work"]]
     if not both:
         print(f"{name}: no paired values")
-        return
+        return None
+    note = ", ungated" if bound is None else f", bound {bound}"
     print(f"{name} ({unit}, {better} is better{note})")
-    med = {}
+    med, xs = {}, {}
     for side in ("base", "work"):
-        xs = [p[side][name] for p in both]
-        q1, med[side], q3 = quartiles(xs)
+        xs[side] = [p[side][name] for p in both]
+        q1, med[side], q3 = quartiles(xs[side])
         print(f"  {side}: median {med[side]:.4g} [quartiles {q1:.4g}, {q3:.4g}]")
     sign = 1 if better == "lower" else -1
     wins = {"work": 0, "base": 0, "tie": 0}
@@ -90,6 +115,11 @@ def report(name: str, unit: str, better: str, pairs: list[dict], note: str = "")
         f"  work/base median {ratio:.3f}; pairs won: work {wins['work']}, "
         f"base {wins['base']}, tied {wins['tie']}"
     )
+    if bound is None:
+        return None
+    v = verdict(xs["base"], xs["work"], better, bound)
+    print(f"  verdict: {v}")
+    return v
 
 
 def main(argv: list[str]) -> int:
@@ -134,9 +164,10 @@ def main(argv: list[str]) -> int:
               f"{errors} runs errored")
     values = [{s: p[s].get("values", {}) for s in ("base", "work")} for p in pairs]
     for m in bench["end_to_end"]:
-        report(m["name"], m["unit"], m["better"], values, f", bound {m['bound']}")
+        if report(m["name"], m["unit"], m["better"], values, m["bound"]) == "worse beyond bound":
+            ok = False
     for name, (unit, better) in UNGATED.items():
-        report(name, unit, better, values, ", ungated")
+        report(name, unit, better, values)
     return 0 if ok else 1
 
 

@@ -1,0 +1,48 @@
+"""The per-metric verdict of ``scripts/bench_pairs.py`` (no Spark)."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+
+
+@pytest.fixture
+def verdict(monkeypatch):
+    monkeypatch.syspath_prepend(SCRIPTS)
+    from bench_pairs import verdict
+
+    return verdict
+
+
+TIGHT = [10.0, 10.1, 10.2, 10.1, 10.0]  # quartiles 0.1 apart
+RATE = [100.0, 101.0, 99.0, 100.0, 100.0]
+WIDE = [5.0, 7.5, 10.0, 15.0, 16.0]  # quartiles 7.5 apart around 10
+
+
+@pytest.mark.parametrize(
+    "base,work,better,want",
+    [
+        # Tight base runs: only the median shift against the bound counts.
+        (TIGHT, [10.5, 10.6, 10.4, 10.5, 10.7], "lower", "within bound"),
+        (TIGHT, [12.6, 12.7, 12.8, 12.6, 12.9], "lower", "worse beyond bound"),
+        (RATE, [70.0, 72.0, 71.0, 70.0, 69.0], "higher", "worse beyond bound"),
+        (RATE, [130.0, 131.0, 129.0, 130.0, 128.0], "higher", "within bound"),
+        # Base runs wider than the bound: a median inside it stays
+        # unresolved ...
+        (WIDE, [9.0, 14.0, 11.0, 6.0, 12.0], "lower", "unresolved"),
+        # ... unless every work run beats every base run.
+        (WIDE, [4.0, 4.5, 3.0, 4.9, 2.0], "lower", "within bound"),
+        # A median shift beyond the bound is worse however wide the spread.
+        (WIDE, [13.0, 14.0, 12.6, 20.0, 30.0], "lower", "worse beyond bound"),
+    ],
+)
+def test_verdict(verdict, base, work, better, want):
+    assert verdict(base, work, better, 0.25) == want
+
+
+def test_verdict_at_the_bound_is_within(verdict):
+    """A median exactly at the bound is not beyond it."""
+    assert verdict([1.0, 1.0, 1.0], [1.25, 1.25, 1.25], "lower", 0.25) == "within bound"

@@ -12,6 +12,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -24,6 +25,7 @@ from mysql_postgres_debezium_cdc_spark.sources.debezium import (
 from mysql_postgres_debezium_cdc_spark.streaming.cdc import (
     CdcPipeline,
     apply_changes,
+    change_rows,
     compact,
     with_change_columns,
 )
@@ -811,3 +813,47 @@ def test_router_dead_letters_keep_row_image(spark, tmp_path):
     assert dl[4]["src_table"] == "audit_log" and dl[4]["_error"] is None
     assert json.loads(dl[4]["after"]) == {"id": 99, "note": "x", "tags": [1, 2]}
     assert dl[6]["_error"].startswith("unparseable envelope")
+
+
+def _compacted_frames(spark, tmp_path, monkeypatch):
+    """``compact``'s output for a typed decode (the ``CdcPipeline`` path)
+    and for each table slice of a router batch."""
+    records = [
+        (env("c", after={"id": 1, "name": "a", "created_ms": 5}), 0),
+        (env("d", before={"id": 1, "name": "a", "created_ms": 5}), 1),
+        (env("u", after={"id": 2, "name": "b", "created_ms": 6}, wrap=True), 2),
+    ]
+    frames = {
+        "typed": compact(with_change_columns(decode_envelope(raw_df(spark, records), ROW_SCHEMA)),
+                         ["id"])
+    }
+    router = _router(spark, tmp_path / "state")
+    for table, pipe in router.pipelines.items():
+        monkeypatch.setattr(pipe.sink, "merge", lambda c, t=table: frames.__setitem__(t, c))
+    router.process_batch(_router_raw(spark))
+    assert sorted(frames) == ["customers", "orders", "typed"]
+    return frames
+
+
+def test_compact_returns_the_change_rows_columns(spark, tmp_path, monkeypatch):
+    """``compact`` returns exactly the compacted-change columns
+    ``change_rows`` builds, in the same order, whatever else the input
+    holds."""
+    want = change_rows(spark.range(1).selectExpr("id", "'a' AS name"), ["id"], ["name"], 0)
+    assert want.columns == ["_pk_id", "_is_delete", "after", "_cdc_offset"]
+    frames = _compacted_frames(spark, tmp_path, monkeypatch)
+    assert {k: f.columns for k, f in frames.items()} == dict.fromkeys(frames, want.columns)
+
+
+def test_compact_shuffle_carries_only_the_change(spark, tmp_path, monkeypatch):
+    """The executed plan's partial (map-side) aggregate buffers a struct
+    of the delete flag, the after image and the offset only: the raw
+    record, its topic, the before image and the op stay out of the
+    compaction shuffle."""
+    for name, frame in _compacted_frames(spark, tmp_path, monkeypatch).items():
+        frame.collect()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        m = re.search(r"partial_max_by\(struct\(([^)]*)\)", plan)
+        assert m, plan
+        fields = m.group(1).split(", ")[::2]  # name, value, name, value, ...
+        assert fields == ["_is_delete", "after", "_cdc_offset"], (name, plan)

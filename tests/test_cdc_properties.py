@@ -6,17 +6,21 @@ Consumer.java:122-127)."""
 from __future__ import annotations
 
 import json
+import tempfile
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
 from mysql_postgres_debezium_cdc_spark.streaming.cdc import (
+    ParquetStateSink,
     apply_changes,
     compact,
     with_change_columns,
 )
+from tests.test_cdc import _ESCAPED_LITERALS, _RESERVED_KEYWORDS, _confs
 
 ROW_SCHEMA = T.StructType(
     [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
@@ -200,6 +204,77 @@ def test_lastwrite_replay_equivalence_composite_pk(spark, events, n_batches):
     """The multi-column-PK contract (pk.<table>=a,b grammar): compaction
     and deletes key on the FULL composite, never a prefix of it."""
     assert spark_replay_composite(spark, events, n_batches) == oracle_replay_composite(events)
+
+
+# Column names that are no SQL identifiers, reserved keywords, or hold
+# a quote or a backtick: each must stay one column through every SQL
+# string the CDC path builds from it.
+HOSTILE_NAMES = ["kafka-partition", "table", "order", "it's", "a b", "tick`name"]
+
+
+@st.composite
+def hostile_changelogs(draw):
+    """A changelog whose PK and row column names are drawn from
+    ``HOSTILE_NAMES`` (one or two PK columns, one or two row columns),
+    split into one to three batches."""
+    names = draw(st.permutations(HOSTILE_NAMES))
+    n_pk = draw(st.integers(1, 2))
+    pk, cols = names[:n_pk], names[n_pk : n_pk + draw(st.integers(1, 2))]
+    events = draw(st.lists(
+        st.tuples(
+            st.sampled_from(["c", "u", "r", "d"]),
+            st.tuples(*[st.integers(0, 2) for _ in pk]),
+            st.tuples(*[st.text(alphabet="a'`", max_size=2) for _ in cols]),
+        ),
+        min_size=1,
+        max_size=16,
+    ))
+    return pk, cols, events, draw(st.integers(1, 3))
+
+
+@pytest.mark.parametrize(
+    "confs",
+    [{}, {_RESERVED_KEYWORDS: "true"}, {_ESCAPED_LITERALS: "true"}],
+    ids=["default", "reserved-keywords", "escaped-literals"],
+)
+@settings(max_examples=5, deadline=None, derandomize=True, suppress_health_check=list(HealthCheck))
+@given(log=hostile_changelogs())
+def test_hostile_column_names_replay_to_last_write(spark, confs, log):
+    """decode → compact → apply_changes, and the same batches through a
+    ``ParquetStateSink`` merge and read, equal the in-order replay when
+    every PK and row column name is hostile, under the default conf,
+    ANSI reserved keywords and escaped string literals."""
+    pk, cols, events, n_batches = log
+    schema = T.StructType(
+        [T.StructField(c, T.LongType()) for c in pk]
+        + [T.StructField(c, T.StringType()) for c in cols]
+    )
+    want: dict[tuple, tuple] = {}
+    rows = []
+    for off, (op, key, vals) in enumerate(events):
+        img = dict(zip(pk, key)) | dict(zip(cols, vals))
+        env = {"before": img if op == "d" else None, "after": None if op == "d" else img,
+               "op": op}
+        rows.append((json.dumps(env), off))
+        if op == "d":
+            want.pop(key, None)
+        else:
+            want[key] = vals
+
+    def replica(df):
+        return {tuple(r[c] for c in pk): tuple(r[c] for c in cols) for r in df.collect()}
+
+    step = max(1, (len(rows) + n_batches - 1) // n_batches)
+    with _confs(spark, confs), tempfile.TemporaryDirectory() as root:
+        sink = ParquetStateSink(spark, root, pk, cols)
+        state = None
+        for i in range(0, len(rows), step):
+            batch = spark.createDataFrame(rows[i : i + step], "value string, `offset` long")
+            compacted = compact(with_change_columns(decode_envelope(batch, schema)), pk)
+            state = apply_changes(state, compacted, pk, cols)
+            sink.merge(compacted)
+        assert replica(state) == want
+        assert replica(sink.read()) == want
 
 
 # --- egress roundtrip property -----------------------------------------
