@@ -153,7 +153,7 @@ class DbapiKeyedSink:
                         cur.executemany(delete_sql, dels)
                         dels.clear()
 
-                # state_rows order: pk_cols, row_cols, offset, delete flag.
+                # Change-row order: pk_cols, row_cols, offset, delete flag.
                 for r in rows:
                     if r[-1]:
                         dels.append(tuple(r[:n_pk]))

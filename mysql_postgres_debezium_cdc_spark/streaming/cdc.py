@@ -7,24 +7,25 @@ ordering implicitly from a single thread (Consumer.java:122-127); Spark
 shuffles destroy arrival order, so ordering is made EXPLICIT here:
 
 1. ``compact``: one surviving change per key per micro-batch —
-   ``max_by(struct(_is_delete, after, _cdc_offset), _cdc_offset)``, the
-   same compacted-change format ``change_rows`` builds and
-   ``state_rows`` reads.  Partial aggregation means the shuffle carries
-   at most one change row per (key, map-partition): at 100 TB of backlog
-   this is the difference between shuffling the firehose and shuffling
-   the frontier.
+   ``max_by(struct(_is_delete, after, _cdc_offset), _cdc_offset)`` —
+   returned as one flat change row, the state row plus a delete flag
+   (``pk_cols…, row columns…, _cdc_offset, _is_delete``), the shape
+   ``change_rows`` also builds.  Partial aggregation means the shuffle
+   carries at most one change row per (key, map-partition): at 100 TB
+   of backlog this is the difference between shuffling the firehose and
+   shuffling the frontier.
 2. ``apply_changes``: state ⟕ batch full-outer on the PK; batch wins;
    delete drops the key.  Equivalent to Delta's
    ``MERGE … WHEN MATCHED AND is_delete THEN DELETE / UPDATE SET * /
    INSERT *`` — expressed engine-neutrally so the state store can be
    parquet (tests), Delta/Iceberg (cluster), or JDBC.
 3. ``ParquetStateSink``: micro-batch merge into versioned parquet
-   state — one base snapshot plus at most one cumulative delta per
-   version, read back as ``apply_changes(base, delta)`` — with an atomic
-   ``_LOG`` swap: the local stand-in for a Delta MERGE sink.  A commit
-   writes only the rows of keys changed since the base (as the
-   reference's ``INSERT … ON CONFLICT`` / ``DELETE`` writes only the
-   rows a batch changes, Consumer.java:197-253); once the delta reaches
+   state — one base snapshot plus at most one cumulative delta of
+   change rows per version, read back as ``apply_changes(base, delta)``
+   — with an atomic ``_LOG`` swap: the local stand-in for a Delta MERGE
+   sink.  A commit writes only the rows of keys changed since the base
+   (as the reference's ``INSERT … ON CONFLICT`` / ``DELETE`` writes only
+   the rows a batch changes, Consumer.java:197-253); once the delta reaches
    half the base, a commit folds it into a new base.  Exactly-once =
    checkpointed offsets + idempotent merge (same convergence argument as
    the reference's ON CONFLICT upsert, Consumer.java:210-211).
@@ -51,15 +52,12 @@ from mysql_postgres_debezium_cdc_spark.sources.debezium import _reject_reserved,
 
 IS_DELETE = "_is_delete"
 ORDER_COL = "_cdc_offset"
+_LATEST = "_latest"  # compact's aggregate column
 
 # Codec of every ParquetStateSink write: zstd stores these narrow keyed
 # tables in markedly fewer bytes than Spark's snappy default, and bytes on
 # disk are what the sink's retention bound and fold rule are stated in.
 _STATE_CODEC = "zstd"
-
-
-def _pk_alias(col: str) -> str:
-    return f"_pk_{col}"
 
 
 def with_change_columns(
@@ -92,26 +90,27 @@ def change_rows(
     offset: int,
     delete: bool = False,
 ) -> DataFrame:
-    """``frame``'s rows as compacted changes, the shape ``apply_changes``
-    and the state sinks' ``merge`` read: one ``_pk_<c>`` per key column,
-    the delete flag, an ``after`` struct of ``row_cols`` and ``offset``
-    as every row's source offset.  For state that a job keys itself
-    rather than decoding it from change events."""
-    return frame.select(
-        *[F.col(c).alias(_pk_alias(c)) for c in pk_cols],
-        F.lit(delete).alias(IS_DELETE),
-        F.struct(*row_cols).alias("after"),
-        F.lit(int(offset)).cast("long").alias(ORDER_COL),
+    """``frame``'s rows as change rows, the shape ``compact`` returns and
+    ``apply_changes`` and the state sinks' ``merge`` read: ``pk_cols``,
+    ``row_cols``, ``offset`` as every row's ``_cdc_offset`` and the
+    delete flag.  For state that a job keys itself rather than decoding
+    it from change events."""
+    q = quote_ident
+    return frame.selectExpr(
+        *map(q, [*pk_cols, *row_cols]),
+        f"CAST({int(offset)} AS BIGINT) AS {q(ORDER_COL)}",
+        f"{bool(delete)} AS {q(IS_DELETE)}",
     )
 
 
 def compact(batch: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
     """Latest change per key, by offset order (SURVEY §2.1 composite
-    semantics), in ``change_rows``' columns: ``_pk_<c>…, _is_delete,
-    after, _cdc_offset``.  Key columns come from ``after`` for upserts
-    and ``before`` for deletes (Consumer.java:197-253); nothing else of
-    the input is read, so Catalyst prunes a decoded frame to
-    ``before``, ``after``, ``_is_delete`` and ``_cdc_offset``.
+    semantics), as change rows: ``pk_cols…``, then every other field of
+    the ``after`` image (null for a delete), ``_cdc_offset`` and
+    ``_is_delete``.  Key columns come from ``after`` for upserts and
+    ``before`` for deletes (Consumer.java:197-253); nothing else of the
+    input is read, so Catalyst prunes a decoded frame to ``before``,
+    ``after``, ``_is_delete`` and ``_cdc_offset``.
 
     Physical note: ``max_by(struct(_is_delete, after, _cdc_offset),
     _cdc_offset)`` carries a struct aggregation buffer, which Tungsten
@@ -126,38 +125,37 @@ def compact(batch: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
     (key, map partition) — the frontier, not the firehose — which is the
     property that matters at 100 TB.
 
-    An input that already has a ``_pk_<c>`` column raises ``ValueError``."""
+    A key or ``after`` field named ``_is_delete``, ``_cdc_offset`` or
+    ``_latest`` (the aggregate's column) raises ``ValueError``."""
     q = quote_ident
-    pk_aliases = [_pk_alias(c) for c in pk_cols]
-    _reject_reserved(batch.columns, pk_aliases, "compact")
-    keys = [q(a) for a in pk_aliases]
+    key_names = {c.lower() for c in pk_cols}
+    image = batch.schema["after"].dataType
+    row = [f.name for f in image.fields if f.name.lower() not in key_names]
+    _reject_reserved([*pk_cols, *row], (IS_DELETE, ORDER_COL, _LATEST), "compact")
+    keys = list(map(q, pk_cols))
     change = [q(IS_DELETE), "after", q(ORDER_COL)]
+    # Keys are grouping expressions, not a projection ahead of the
+    # aggregate, so a key named ``after`` cannot shadow the row image.
     return (
-        batch.selectExpr(
-            *[f"COALESCE(after.{q(c)}, before.{q(c)}) AS {k}" for c, k in zip(pk_cols, keys)],
-            *change,
+        batch.groupBy(*[F.expr(f"COALESCE(after.{k}, before.{k}) AS {k}") for k in keys])
+        .agg(F.expr(f"MAX_BY(STRUCT({', '.join(change)}), {q(ORDER_COL)}) AS {_LATEST}"))
+        .selectExpr(
+            *keys,
+            *[f"{_LATEST}.after.{q(c)} AS {q(c)}" for c in row],
+            f"{_LATEST}.{q(ORDER_COL)}",
+            f"{_LATEST}.{q(IS_DELETE)}",
         )
-        .groupBy(*keys)
-        .agg(F.expr(f"MAX_BY(STRUCT({', '.join(change)}), {q(ORDER_COL)}) AS _latest"))
-        .selectExpr(*keys, "_latest.*")
     )
 
 
 def state_rows(
     changes: DataFrame, pk_cols: Sequence[str], row_cols: Sequence[str]
 ) -> DataFrame:
-    """Compacted changes (``compact`` or ``change_rows`` output) read as
-    state rows: ``pk_cols``, ``row_cols`` from ``after`` (null for a
-    delete), ``_cdc_offset`` and ``_is_delete``.  The one reader of the
-    compacted-change format: ``apply_changes`` and every sink go
-    through it."""
-    q = quote_ident
-    return changes.selectExpr(
-        *[f"{q(_pk_alias(c))} AS {q(c)}" for c in pk_cols],
-        *[f"after.{q(c)} AS {q(c)}" for c in row_cols],
-        q(ORDER_COL),
-        q(IS_DELETE),
-    )
+    """Change rows (``compact`` or ``change_rows`` output) limited to
+    ``pk_cols``, ``row_cols``, ``_cdc_offset`` and ``_is_delete``, in
+    that order: the one projection ``apply_changes`` and every sink
+    read."""
+    return changes.selectExpr(*map(quote_ident, [*pk_cols, *row_cols, ORDER_COL, IS_DELETE]))
 
 
 def apply_changes(
@@ -189,10 +187,10 @@ class ParquetStateSink:
 
     Layout (merge-on-read): a committed version is one *base* snapshot
     directory (``v-…``, the state schema) plus at most one *cumulative
-    delta* directory (``d-…``).  The delta holds, in the compacted
-    shape (``_pk_*``, ``after`` limited to ``row_cols``, ``_is_delete``,
-    ``_cdc_offset``), the latest change of every key changed since the
-    base, deletes included, so ``read(v)`` is exactly
+    delta* directory (``d-…``).  The delta holds, as ``state_rows``
+    (``pk_cols``, ``row_cols``, ``_cdc_offset``, ``_is_delete``), the
+    latest change of every key changed since the base, deletes
+    included, so ``read(v)`` is exactly
     ``apply_changes(base, delta_v)``.  The first ``merge`` writes the
     base; every later ``merge`` writes only
     ``delta_prev ⟕anti batch-keys ∪ batch`` — O(keys changed since the
@@ -340,18 +338,6 @@ class ParquetStateSink:
         df.write.mode("overwrite").option("compression", _STATE_CODEC).parquet(out)
         return name
 
-    def _delta_rows(self, compacted: DataFrame) -> DataFrame:
-        """A compacted batch in the delta shape: keys, ``after`` limited
-        to ``row_cols``, delete flag and offset."""
-        q = quote_ident
-        after = ", ".join(f"after.{q(c)} AS {q(c)}" for c in self.row_cols)
-        return compacted.selectExpr(
-            *[q(_pk_alias(c)) for c in self.pk_cols],
-            f"STRUCT({after}) AS after",
-            q(IS_DELETE),
-            q(ORDER_COL),
-        )
-
     def merge(self, compacted: DataFrame) -> None:
         entries = self._log_entries()
         seq = entries[-1][0] + 1 if entries else 0
@@ -365,13 +351,10 @@ class ParquetStateSink:
             if delta is not None and 2 * self._bytes(delta) >= self._bytes(base):
                 base, delta = self._write("v", seq, self.read()), None
                 entries[-1] = (prev_seq, base, None)
-            rows = self._delta_rows(compacted)
+            rows = state_rows(compacted, self.pk_cols, self.row_cols)
             if delta is not None:
-                q = quote_ident
-                keys = rows.selectExpr(*[q(_pk_alias(c)) for c in self.pk_cols])
-                kept = self._scan(delta).join(
-                    keys, on=[_pk_alias(c) for c in self.pk_cols], how="left_anti"
-                )
+                keys = rows.selectExpr(*map(quote_ident, self.pk_cols))
+                kept = self._scan(delta).join(keys, on=self.pk_cols, how="left_anti")
                 rows = kept.unionByName(rows)
             entries.append((seq, base, self._write("d", seq, rows)))
         # Atomic log swap (rename is atomic on POSIX).  Only the retained
@@ -458,15 +441,18 @@ class DeltaStateSink:
             return
         src = state_rows(compacted, self.pk_cols, self.row_cols)
         tgt = self._DeltaTable.forPath(self.spark, self.root)
-        on = " AND ".join(f"t.{c} <=> s.{c}" for c in self.pk_cols)
-        sets = {c: f"s.{c}" for c in [*self.row_cols, ORDER_COL]}
-        inserts = {c: f"s.{c}" for c in self.pk_cols} | sets
+        q = quote_ident
+        on = " AND ".join(f"t.{q(c)} <=> s.{q(c)}" for c in self.pk_cols)
+        # Delta parses a set-map key as a (backtick-quotable) column name.
+        sets = {q(c): f"s.{q(c)}" for c in [*self.row_cols, ORDER_COL]}
+        inserts = {q(c): f"s.{q(c)}" for c in self.pk_cols} | sets
+        delete = f"s.{q(IS_DELETE)}"
         (
             tgt.alias("t")
             .merge(src.alias("s"), on)
-            .whenMatchedDelete(condition=f"s.{IS_DELETE}")
-            .whenMatchedUpdate(condition=f"NOT s.{IS_DELETE}", set=sets)
-            .whenNotMatchedInsert(condition=f"NOT s.{IS_DELETE}", values=inserts)
+            .whenMatchedDelete(condition=delete)
+            .whenMatchedUpdate(condition=f"NOT {delete}", set=sets)
+            .whenNotMatchedInsert(condition=f"NOT {delete}", values=inserts)
             .execute()
         )
 

@@ -34,6 +34,7 @@ from gitrev import REPO, export_rev
 # Ungated timings from the run's stderr line, with their better direction.
 UNGATED = {"commit_p50_s": ("s", "lower"), "catchup_events_per_s": ("events/s", "higher")}
 RUN_TIMEOUT_S = 1200
+GAIN_PAIRS = 10  # fewest pairs a gain may be shown on
 
 
 def run_once(root: str, workload: str, seed: int, seconds: float) -> dict:
@@ -71,17 +72,26 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def verdict(base: list[float], work: list[float], better: str, bound: float) -> str:
-    """One end-to-end metric's verdict over paired runs.
+    """One end-to-end metric's verdict over paired runs (``base[i]`` and
+    ``work[i]`` are pair ``i``).
 
     ``worse beyond bound``: the work median is worse than the base median
     by more than ``bound`` (a fraction of the base median).
+    ``gain shown``: otherwise, when at least ``GAIN_PAIRS`` pairs ran,
+    the work run won at least nine tenths of them (a tie counts for
+    neither side) and the work median is better than the base median by
+    more than the base interquartile range.
     ``unresolved``: otherwise, when the base runs spread wider than the
     bound (interquartile range over median) and not every work run beats
     every base run.  ``within bound``: otherwise."""
     sign = 1 if better == "lower" else -1
     q1, med, q3 = quartiles(base)
-    if sign * (statistics.median(work) - med) > bound * abs(med):
+    shift = sign * (statistics.median(work) - med)
+    if shift > bound * abs(med):
         return "worse beyond bound"
+    wins = sum(1 for b, w in zip(base, work) if sign * (w - b) < 0)
+    if len(base) >= GAIN_PAIRS and 10 * wins >= 9 * len(base) and -shift > q3 - q1:
+        return "gain shown"
     if q3 - q1 > bound * abs(med) and not all(
         sign * (w - b) < 0 for w in work for b in base
     ):

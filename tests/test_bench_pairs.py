@@ -46,3 +46,26 @@ def test_verdict(verdict, base, work, better, want):
 def test_verdict_at_the_bound_is_within(verdict):
     """A median exactly at the bound is not beyond it."""
     assert verdict([1.0, 1.0, 1.0], [1.25, 1.25, 1.25], "lower", 0.25) == "within bound"
+
+
+BASE10 = [10.0, 10.2, 9.9, 10.1, 10.0, 10.3, 9.8, 10.1, 10.0, 10.2]  # quartiles 0.2 apart
+
+
+@pytest.mark.parametrize(
+    "base,work,better,want",
+    [
+        # Ten pairs, every one won, medians 1.0 apart: a gain.
+        (BASE10, [x - 1.0 for x in BASE10], "lower", "gain shown"),
+        (BASE10, [x + 1.0 for x in BASE10], "higher", "gain shown"),
+        # Nine wins and one tie still make nine tenths ...
+        (BASE10, [x - 1.0 for x in BASE10[:9]] + BASE10[9:], "lower", "gain shown"),
+        # ... eight wins and two ties do not: a tie is no win.
+        (BASE10, [x - 1.0 for x in BASE10[:8]] + BASE10[8:], "lower", "within bound"),
+        # Every pair won, but the medians lie within the base quartiles.
+        (BASE10, [x - 0.1 for x in BASE10], "lower", "within bound"),
+        # Fewer than ten pairs never show a gain.
+        (BASE10[:9], [x - 1.0 for x in BASE10[:9]], "lower", "within bound"),
+    ],
+)
+def test_verdict_gain_shown(verdict, base, work, better, want):
+    assert verdict(base, work, better, 0.25) == want

@@ -629,7 +629,7 @@ def test_decode_envelope_edge_matrix(spark, confs, value_col, topic_col):
             topic_col=topic_col,
         )
         assert _decoded_rows(decoded) == [want for _, want in _EDGE_CASES]
-        kept = compact(with_change_columns(decoded), ["id"]).select("_pk_id", "_cdc_offset")
+        kept = compact(with_change_columns(decoded), ["id"]).select("id", "_cdc_offset")
         assert sorted(map(tuple, kept.collect()), key=str) == [
             (1, 0), (2, 1), (3, 2), (4, 3), (5, 4), (6, 5), (None, 13),
         ]
@@ -684,25 +684,32 @@ def test_decode_row_field_with_quote(spark, escaped):
         ],
         ("change_columns", "_is_delete"),
         ("change_columns", "_cdc_offset"),
-        ("compact", "_pk_id"),
+        *[
+            (stage, c)
+            for stage in ("compact_field", "compact_key")
+            for c in ("_cdc_offset", "_IS_DELETE", "_latest")
+        ],
     ],
 )
 def test_reserved_input_columns_are_rejected(spark, stage, column):
-    """An input column that a stage adds is a clear ValueError naming it,
-    not duplicate columns and an ambiguous reference downstream."""
+    """An input column that a stage adds, or a key or row-image field
+    that clashes with a column ``compact`` returns or aggregates into,
+    is a clear ValueError naming it, not duplicate columns and an
+    ambiguous reference downstream."""
     raw = _edge_frame(spark)
+    changes = with_change_columns(decode_envelope(raw, _EDGE_ROW))
     stages = {
-        "decode": lambda df: decode_envelope(df, _EDGE_ROW),
-        "change_columns": lambda df: with_change_columns(df),
-        "compact": lambda df: compact(df, ["id"]),
+        "decode": lambda: decode_envelope(raw.withColumn(column, F.lit(1)), _EDGE_ROW),
+        "change_columns": lambda: with_change_columns(
+            decode_envelope(raw, _EDGE_ROW).withColumn(column, F.lit(1))
+        ),
+        "compact_field": lambda: compact(
+            changes.withColumn("after", F.struct("after.*", F.lit(1).alias(column))), ["id"]
+        ),
+        "compact_key": lambda: compact(changes, ["id", column]),
     }
-    upstream = {
-        "decode": raw,
-        "change_columns": decode_envelope(raw, _EDGE_ROW),
-        "compact": with_change_columns(decode_envelope(raw, _EDGE_ROW)),
-    }[stage]
     with pytest.raises(ValueError, match=f"'{column}'"):
-        stages[stage](upstream.withColumn(column, F.lit(1)))
+        stages[stage]()
 
 
 # A two-table batch for the router's decode tests: customers, orders
@@ -836,13 +843,30 @@ def _compacted_frames(spark, tmp_path, monkeypatch):
 
 
 def test_compact_returns_the_change_rows_columns(spark, tmp_path, monkeypatch):
-    """``compact`` returns exactly the compacted-change columns
-    ``change_rows`` builds, in the same order, whatever else the input
-    holds."""
-    want = change_rows(spark.range(1).selectExpr("id", "'a' AS name"), ["id"], ["name"], 0)
-    assert want.columns == ["_pk_id", "_is_delete", "after", "_cdc_offset"]
+    """``compact`` returns exactly the change-row columns ``change_rows``
+    builds over the key and the row image's other fields, in the same
+    order, whatever else the input holds."""
+    images = {"typed": ROW_SCHEMA, "customers": ROW_SCHEMA, "orders": _ORDERS_ROW}
+    want = {
+        k: change_rows(spark.createDataFrame([], row), ["id"], row.names[1:], 0).columns
+        for k, row in images.items()
+    }
+    assert want["orders"] == ["id", "purchaser", "product", "_cdc_offset", "_is_delete"]
     frames = _compacted_frames(spark, tmp_path, monkeypatch)
-    assert {k: f.columns for k, f in frames.items()} == dict.fromkeys(frames, want.columns)
+    assert {k: f.columns for k, f in frames.items()} == want
+
+
+def test_change_rows_reads_dotted_names_as_names(spark):
+    """Key and row column names holding a dot stay one column each
+    through ``change_rows`` and ``apply_changes``: no name is read as a
+    struct field path."""
+    frame = spark.createDataFrame([(1, "x")], "`a.b` long, `c.d` string")
+    upsert = change_rows(frame, ["a.b"], ["c.d"], 7)
+    assert upsert.columns == ["a.b", "c.d", "_cdc_offset", "_is_delete"]
+    state = apply_changes(None, upsert, ["a.b"], ["c.d"])
+    assert [tuple(r) for r in state.collect()] == [(1, "x", 7)]
+    delete = change_rows(frame, ["a.b"], ["c.d"], 8, delete=True)
+    assert apply_changes(state, delete, ["a.b"], ["c.d"]).collect() == []
 
 
 def test_compact_shuffle_carries_only_the_change(spark, tmp_path, monkeypatch):

@@ -206,10 +206,12 @@ def test_lastwrite_replay_equivalence_composite_pk(spark, events, n_batches):
     assert spark_replay_composite(spark, events, n_batches) == oracle_replay_composite(events)
 
 
-# Column names that are no SQL identifiers, reserved keywords, or hold
-# a quote or a backtick: each must stay one column through every SQL
-# string the CDC path builds from it.
-HOSTILE_NAMES = ["kafka-partition", "table", "order", "it's", "a b", "tick`name"]
+# Column names that are no SQL identifiers, reserved keywords, hold a
+# quote, a backtick or a dot, or name the row image itself: each must
+# stay one column through every SQL string the CDC path builds from it.
+HOSTILE_NAMES = [
+    "kafka-partition", "table", "order", "it's", "a b", "tick`name", "a.b", "after",
+]
 
 
 @st.composite

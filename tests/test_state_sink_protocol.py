@@ -11,7 +11,10 @@ is a constructor change, not a semantics change.
 from __future__ import annotations
 
 import json
+import sys
+import types
 
+import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
@@ -19,10 +22,12 @@ from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
 from mysql_postgres_debezium_cdc_spark.streaming.cdc import (
     DeltaStateSink,
     ParquetStateSink,
+    change_rows,
     compact,
     has_delta,
     with_change_columns,
 )
+from tests.test_cdc import _RESERVED_KEYWORDS, _confs
 
 ROW_SCHEMA = T.StructType(
     [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
@@ -116,6 +121,57 @@ def test_delta_sink_requires_delta(spark, tmp_path):
         pytest.skip("delta-spark installed; import guard not reachable")
     with pytest.raises(ImportError):
         DeltaStateSink(spark, str(tmp_path / "d"), ["id"], ["name"])
+
+
+def test_delta_sink_merge_quotes_every_name(spark, tmp_path, monkeypatch):
+    """``DeltaStateSink.merge`` quotes every name in its ON condition, its
+    clause conditions and its value expressions: each expression it
+    hands the Delta builder resolves over the target and source frames
+    when the columns are a reserved keyword, a name with a space and a
+    name with a backtick, under ANSI reserved keywords.  A stand-in
+    ``delta.tables`` module records the builder calls."""
+    calls = []
+
+    class Builder:
+        def __getattr__(self, method):
+            def record(*args, **kwargs):
+                calls.append((method, args, kwargs))
+                return self
+
+            return record
+
+    class DeltaTable:
+        @staticmethod
+        def isDeltaTable(_spark, _path):
+            return True
+
+        @staticmethod
+        def forPath(_spark, _path):
+            return Builder()
+
+    tables = types.ModuleType("delta.tables")
+    tables.DeltaTable = DeltaTable
+    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
+    monkeypatch.setitem(sys.modules, "delta.tables", tables)
+    pk, cols = ["table"], ["a b", "tick`name"]
+    frame = spark.createDataFrame(
+        [(1, "x", "y")], "`table` long, `a b` string, `tick``name` string"
+    )
+    with _confs(spark, {_RESERVED_KEYWORDS: "true"}):
+        sink = DeltaStateSink(spark, str(tmp_path / "d"), pk, cols)
+        sink.merge(change_rows(frame, pk, cols, 3))
+        by_method = {m: (args, kwargs) for m, args, kwargs in calls}
+        (src, on), _ = by_method["merge"]
+        exprs = [on]
+        for method in ("whenMatchedDelete", "whenMatchedUpdate", "whenNotMatchedInsert"):
+            kwargs = by_method[method][1]
+            exprs += [kwargs["condition"], *kwargs.get("set", kwargs.get("values", {})).values()]
+        target = frame.selectExpr("*", "CAST(0 AS BIGINT) AS _cdc_offset").alias("t")
+        got = target.crossJoin(src).select(*[F.expr(e) for e in exprs]).collect()
+    # on; delete; update condition and set; insert condition and values.
+    assert [tuple(r) for r in got] == [
+        (True, False, True, "x", "y", 3, True, 1, "x", "y", 3)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -227,7 +283,7 @@ def test_sink_delta_path_keeps_one_base(spark, tmp_path):
     def delta_rows():
         d = spark.read.parquet(sink.current_version_dir())
         return sorted(
-            (r["_pk_id"], r["_is_delete"], r["after"]["name"], r["_cdc_offset"])
+            (r["id"], r["_is_delete"], r["name"], r["_cdc_offset"])
             for r in d.collect()
         )
 
@@ -328,7 +384,7 @@ def test_non_identifier_passthrough_column_does_not_break_compact_merge_read(spa
         rows, "value string, topic string, offset long, `kafka-partition` int"
     )
     compacted = compact(with_change_columns(decode_envelope(raw, ROW_SCHEMA)), ["id"])
-    assert compacted.columns == ["_pk_id", "_is_delete", "after", "_cdc_offset"]
+    assert compacted.columns == ["id", "name", "_cdc_offset", "_is_delete"]
     sink = ParquetStateSink(spark, str(tmp_path / "state"), ["id"], ["name"])
     sink.merge(compacted)
     sink.merge(compacted)
